@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** High-watermark store enabling incremental continuation — the Spark
@@ -23,7 +23,7 @@ final case class CheckpointEntry(
 
 trait CheckpointStore {
   /** The reference's one real query (A3): filter job_type+app_id, order
-    * by ts desc, take 1. */
+    * by ts desc (job_id desc on a tie), take 1. */
   def findPreviousJobId(jobType: String, appId: String): Option[Long]
 
   /** Commit-after-save (A10) — only called once a job's files landed. */
@@ -32,54 +32,92 @@ trait CheckpointStore {
 
 /** Parquet-backed store (offline substitution for JDBC, SURVEY.md §7.3
   * — the trait boundary is the reference's class boundary; a prod
-  * deployment implements this over `format("jdbc")`).
+  * deployment uses [[JdbcCheckpointStore]]).
+  *
+  * Lookups are answered from a driver-side index holding the latest
+  * `(ts, job_id)` per `(job_type, app_id)` — the incremental top-k
+  * pattern with k = 1: the answer is kept current as entries arrive
+  * instead of re-scanning every one-row checkpoint file per lookup.
+  * Each lookup lists the checkpoint directory (one metadata call, no
+  * Spark job); only when the listing differs from the data files the
+  * index reflects — files another store instance or process wrote —
+  * is the index reloaded, with one scan under the explicit entry
+  * schema, reduced to latest-per-key on the driver (no shuffle,
+  * nothing cached; checkpoint rows number the export jobs ever
+  * committed, not data rows). [[append]] updates the index and its
+  * file set directly.
+  *
+  * Entries another writer commits between lookups are picked up by
+  * the next lookup, but concurrent writers to one path are
+  * unsupported, as the ingest loop, which runs its chains one at a
+  * time, already requires.
   */
 final class ParquetCheckpointStore(spark: SparkSession, path: String)
     extends CheckpointStore {
   import spark.implicits._
 
-  // Resolve through the Hadoop FileSystem for the configured path —
-  // java.io.File would silently report "no checkpoint" for any
-  // non-local scheme (hdfs://, s3a://) and re-ingest from scratch.
-  private def exists: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  private type Key  = (String, String)     // (job_type, app_id)
+  private type Mark = (Timestamp, Long)    // (ts, job_id)
+
+  private var latest = Map.empty[Key, Mark]
+  // names of the data files `latest` reflects
+  private var indexed = Set.empty[String]
+
+  /** ts DESC, job_id DESC: the later commit wins, the greater job id on
+    * a tie — the reference's ORDER BY ts DESC plus a deterministic
+    * tie-break. */
+  private def later(a: Mark, b: Mark): Boolean = {
+    val c = a._1.compareTo(b._1)
+    c > 0 || c == 0 && a._2 > b._2
   }
 
-  override def findPreviousJobId(jobType: String, appId: String): Option[Long] = {
-    if (!exists) return None
-    // filter → orderBy → limit(1) plans as TakeOrderedAndProject:
-    // per-partition top-1 + driver merge, no global sort — the
-    // scale-correct k=1 top-k (the reference pushed this to Postgres
-    // and then fetchone()'d an unlimited sort).
-    spark.read.parquet(path)
-      .filter(col("job_type") === jobType && col("app_id") === appId)
-      .orderBy(col("ts").desc, col("job_id").desc)
-      .limit(1)
-      .select(col("job_id"))
-      .as[Long]
-      .collect()
-      .headOption
+  private def merge(index: Map[Key, Mark], k: Key, m: Mark): Map[Key, Mark] =
+    if (index.get(k).exists(later(_, m))) index else index.updated(k, m)
+
+  private def listing(): Set[String] =
+    DataFiles.list(spark.sparkContext.hadoopConfiguration, path).map(_.getPath.getName).toSet
+
+  private def reload(files: Set[String]): Unit = {
+    latest =
+      if (files.isEmpty) Map.empty
+      else spark.read.schema(Encoders.product[CheckpointEntry].schema).parquet(path)
+        .select(col("job_type"), col("app_id"), col("ts"), col("job_id"))
+        .as[(String, String, Timestamp, Long)]
+        .collect()
+        .foldLeft(Map.empty[Key, Mark]) { case (index, (t, a, ts, id)) => merge(index, (t, a), (ts, id)) }
+    indexed = files
   }
 
-  override def append(entry: CheckpointEntry): Unit =
+  override def findPreviousJobId(jobType: String, appId: String): Option[Long] = synchronized {
+    val files = listing()
+    if (files != indexed) reload(files)
+    latest.get((jobType, appId)).map(_._2)
+  }
+
+  override def append(entry: CheckpointEntry): Unit = synchronized {
     Seq(entry).toDS().write.mode(SaveMode.Append).parquet(path)
+    latest = merge(latest, (entry.job_type, entry.app_id), (entry.ts, entry.job_id))
+    // The write commits one file. If more appeared, another writer's
+    // file is among them, unread: leave the file set behind so the next
+    // lookup reloads.
+    val added = listing() -- indexed
+    if (added.size == 1) indexed ++= added
+  }
 }
 
 /** JDBC-backed store over embedded Derby (ships with Spark) — the
-  * §7.3 boundary implemented against a REAL database through Spark's
-  * `format("jdbc")` source/sink, matching the reference's Postgres
-  * table one-for-one (DDL mirror of
-  * /root/reference/Unity_to_BigQuery.py:36-42; the filter in
-  * [[findPreviousJobId]] pushes down to the database as the
-  * reference's WHERE did). A prod deployment only changes the URL and
+  * §7.3 boundary implemented against a REAL database through plain
+  * JDBC prepared statements, matching the reference's Postgres table
+  * one-for-one (DDL mirror of the reference's Unity_to_BigQuery.py:36-42;
+  * [[findPreviousJobId]] is the reference's WHERE + ORDER BY, run by
+  * the database). The session parameter is unused and kept for the
+  * constructor's callers. A prod deployment only changes the URL and
   * driver class.
   */
 final class JdbcCheckpointStore(spark: SparkSession, url: String,
     table: String = "ua_completed_reports",
     driver: String = "org.apache.derby.jdbc.EmbeddedDriver")
     extends CheckpointStore {
-  import spark.implicits._
 
   // reference A2: CREATE TABLE IF NOT EXISTS (Derby has no IF NOT
   // EXISTS — swallow the table-exists SQLState instead)
@@ -102,45 +140,46 @@ final class JdbcCheckpointStore(spark: SparkSession, url: String,
     } finally conn.close()
   }
 
-  private def reader =
-    spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table).option("driver", driver)
-
+  // The reference's A3 query, run by the database as a plain prepared
+  // statement: a single-row read needs no Spark job.
   override def findPreviousJobId(jobType: String, appId: String): Option[Long] =
-    reader.load()
-      .filter(col("job_type") === jobType && col("app_id") === appId)
-      .orderBy(col("ts").desc, col("job_id").desc)
-      .limit(1)
-      .select(col("job_id"))
-      .as[Long]
-      .collect()
-      .headOption
+    withStatement(
+      s"""SELECT job_id FROM $table WHERE job_type = ? AND app_id = ?
+         |ORDER BY ts DESC, job_id DESC FETCH FIRST 1 ROWS ONLY""".stripMargin) { ps =>
+      ps.setString(1, jobType)
+      ps.setString(2, appId)
+      val rs = ps.executeQuery()
+      try if (rs.next()) Some(rs.getLong(1)) else None
+      finally rs.close()
+    }
 
   // Single-row commit marker → a plain JDBC INSERT (the reference's
   // A10 insert, Unity_to_BigQuery.py:178-180) — launching a Spark job
   // per checkpoint row would be overhead without distribution, and
   // Spark's Derby dialect writes strings as CLOB, clashing with the
   // reference's VARCHAR schema.
-  override def append(entry: CheckpointEntry): Unit = {
+  override def append(entry: CheckpointEntry): Unit =
+    withStatement(s"INSERT INTO $table VALUES (?, ?, ?, ?, ?, ?)") { ps =>
+      ps.setLong(1, entry.job_id)
+      ps.setString(2, entry.job_type)
+      ps.setTimestamp(3, entry.ts)
+      ps.setString(4, entry.app_id)
+      entry.previous_job_id match {
+        case Some(p) => ps.setLong(5, p)
+        case None    => ps.setNull(5, java.sql.Types.BIGINT)
+      }
+      entry.date_range match {
+        case Some(d) => ps.setString(6, d)
+        case None    => ps.setNull(6, java.sql.Types.VARCHAR)
+      }
+      ps.executeUpdate(): Unit
+    }
+
+  private def withStatement[T](sql: String)(f: java.sql.PreparedStatement => T): T = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
-      val ps = conn.prepareStatement(
-        s"INSERT INTO $table VALUES (?, ?, ?, ?, ?, ?)")
-      try {
-        ps.setLong(1, entry.job_id)
-        ps.setString(2, entry.job_type)
-        ps.setTimestamp(3, entry.ts)
-        ps.setString(4, entry.app_id)
-        entry.previous_job_id match {
-          case Some(p) => ps.setLong(5, p)
-          case None    => ps.setNull(5, java.sql.Types.BIGINT)
-        }
-        entry.date_range match {
-          case Some(d) => ps.setString(6, d)
-          case None    => ps.setNull(6, java.sql.Types.VARCHAR)
-        }
-        ps.executeUpdate(): Unit
-      } finally ps.close()
+      val ps = conn.prepareStatement(sql)
+      try f(ps) finally ps.close()
     } finally conn.close()
   }
 }

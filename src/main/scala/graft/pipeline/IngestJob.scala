@@ -1,20 +1,29 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.concurrent.TimeoutException
 
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The reference's orchestration loop re-expressed on Spark:
   *
   *  - A3  checkpoint lookup   → [[CheckpointStore.findPreviousJobId]]
   *  - A4  incremental request → jobs with id > checkpoint (the local
   *        model of `continueFrom`; job ids are monotone)
-  *  - A6  download + gunzip   → [[UnityExport.readJob]] (gz by ext)
+  *  - A6  download + gunzip   → [[UnityExport.readJob]] (gz by ext),
+  *        parsed once: the sink's write is the only pass, and the row
+  *        count is an [[Observation]] on that write
   *  - A7/A8/A9 route + load   → tenant dataset, table = report type
   *        ("Table name = Report Name", reference README), via
   *        [[WarehouseSink]]
   *  - A10 checkpoint append iff the job had data (`is_files` flag,
   *        /root/reference/Unity_to_BigQuery.py:124-127,178-184)
+  *        — a listing, [[UnityExport.hasData]], with no Spark job; a
+  *        job whose files parse to zero rows halts the same way
   *  - A11/A12 tenant × report-type loop
   *        (/root/reference/Unity_to_BigQuery.py:152-186,189-216)
   *  - A13 errors → [[Notifier]] instead of aborting the sweep.
@@ -49,10 +58,21 @@ final class IngestJob(
     while (next.isDefined && !halted) {
       val jobId = next.get
       poller.awaitReady(appId, jobType, jobId)
-      val batch = UnityExport.readJob(spark, client.jobDir(appId, jobType, jobId), jobId)
-      val n = batch.count()
+      val dir = client.jobDir(appId, jobType, jobId)
+      // A job without data (no non-empty file, or zero rows parsed) is
+      // NOT checkpointed and the sweep must not advance past it — its
+      // files may still be landing; the next run retries from here
+      // (reference is_files semantics: checkpoint only moves when data
+      // was saved).
+      val n =
+        if (!UnityExport.hasData(spark, dir)) 0L
+        else {
+          val rows = Observation()
+          sink.load(UnityExport.readJob(spark, dir, jobId)
+            .observe(rows, count(lit(1)).as("rows")), dataset, jobType)
+          observedRows(rows, jobId)
+        }
       if (n > 0) {
-        sink.load(batch, dataset, jobType)
         checkpoints.append(CheckpointEntry(
           job_id = jobId,
           job_type = jobType,
@@ -63,16 +83,23 @@ final class IngestJob(
         total += n
         prev = Some(jobId)
         next = client.requestExport(appId, jobType, prev)
-      } else {
-        // A file-less job is NOT checkpointed and the sweep must not
-        // advance past it — its files may still be landing; the next
-        // run retries from here (reference is_files semantics:
-        // checkpoint only moves when data was saved).
-        halted = true
-      }
+      } else halted = true
     }
     total
   }
+
+  /** The row count the sink's write observed. The metric reaches the
+    * Observation through the listener bus after the write returns, so
+    * it is awaited, with a bound (never the unbounded `get`): a sink
+    * that did not execute the DataFrame never delivers one, and the
+    * chain then fails instead of hanging (the next run re-ingests the
+    * job, idempotently). */
+  private def observedRows(rows: Observation, jobId: Long): Long =
+    try Await.result(rows.future, IngestJob.ObservedRowsWait).getAs[Long]("rows")
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"no row count observed for export job $jobId: the sink did not execute its DataFrame")
+    }
 
   /** The cross-product driver loop (A12): tenants × report types, one
     * failure never kills the sweep — it posts to the notifier and
@@ -95,6 +122,9 @@ final class IngestJob(
 }
 
 object IngestJob {
+  /** Upper bound on the wait for a write's observed row count. */
+  private val ObservedRowsWait = 10.seconds
+
   /** Standard local wiring: filesystem export service, no-sleep poller
     * (local job dirs are ready immediately). */
   def apply(spark: SparkSession, config: PipelineConfig,

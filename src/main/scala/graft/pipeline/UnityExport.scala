@@ -49,6 +49,11 @@ object UnityExport {
       .sortBy(_._1)
   }
 
+  /** The reference's `is_files` check (:124-127): does the job
+    * directory hold a non-empty data file? A listing, not a read. */
+  def hasData(spark: SparkSession, jobDir: String): Boolean =
+    DataFiles.list(spark.sparkContext.hadoopConfiguration, jobDir).exists(_.getLen > 0)
+
   /** Read one export job directory with the declared schema, with
     * parsed event time and lineage columns attached. */
   def readJob(spark: SparkSession, jobDir: String, jobId: Long): DataFrame =

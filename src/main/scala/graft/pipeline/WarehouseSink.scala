@@ -8,7 +8,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 trait WarehouseSink {
   /** Load a batch into (dataset, table); append semantics, one call per
-    * export job — the reference's per-file `load_table_from_file`. */
+    * export job — the reference's per-file `load_table_from_file`.
+    *
+    * Must execute `df` before returning: [[IngestJob]] reads the job's
+    * row count from an `Observation` attached to it, so the load is the
+    * job's only parse. A sink that returns without executing it fails
+    * the chain, and the next run re-ingests the job. */
   def load(df: DataFrame, dataset: String, table: String): Unit
 }
 

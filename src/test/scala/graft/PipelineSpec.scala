@@ -4,6 +4,8 @@ import java.io.{File, FileOutputStream, OutputStreamWriter, PrintWriter}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.graftbus.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -215,16 +217,147 @@ class PipelineSpec extends SparkSuite {
     assert(real.findPreviousJobId("custom", "app-d").contains(301L))
   }
 
-  test("checkpoint lookup plans as TakeOrderedAndProject (k=1 top-k)") {
-    // the scaladoc's claim, held to: filter+orderBy+limit(1) must not
-    // global-sort
-    import org.apache.spark.sql.functions._
-    val plan = spark.read.parquet(config.checkpointPath)
-      .filter(col("job_type") === "custom" && col("app_id") === "app-a")
-      .orderBy(col("ts").desc, col("job_id").desc)
-      .limit(1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan)
+  private val WorkTag = "graft.test.work"
+
+  /** Runs `f` and counts the Spark jobs it launches from this thread,
+    * and the input records their tasks read. Jobs are matched by a
+    * local property, so work other threads launch is not counted. */
+  private def sparkWork[T](f: => T): (T, Int, Long) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(WorkTag) == tag)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(WorkTag, tag)
+    try {
+      val r = f
+      ListenerBusDrain(sc)
+      (r, jobs.get, records.get)
+    } finally {
+      sc.setLocalProperty(WorkTag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def dataFilesUnder(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) dataFilesUnder(f)
+      else if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
+      else Seq(f)
+    }
+
+  test("each export job is parsed once: input records equal rows committed") {
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints5",
+      warehouseRoot = s"$root/warehouse5",
+      tenants = Seq(TenantConfig("app-e", "Dataset_E")))
+    writeJob("app-e", "custom", 501, rows = 9, gzip = true)
+    writeJob("app-e", "custom", 502, rows = 6, gzip = false)
+    writeJob("app-e", "transaction", 503, rows = 5, gzip = true)
+    val (res, _, records) = sparkWork(IngestJob(spark, cfg,
+      new ParquetCheckpointStore(spark, cfg.checkpointPath),
+      new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier).runAll())
+    assert(res == Map(("app-e", "custom") -> 15L, ("app-e", "transaction") -> 5L))
+    assert(records == 20L, s"read $records input records for 20 committed rows")
+  }
+
+  test("a lookup over an unchanged checkpoint listing launches no Spark job") {
+    val path = s"$root/checkpoints6"
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val writer = new ParquetCheckpointStore(spark, path)
+    writer.append(CheckpointEntry(1L, "custom", ts, "app-f", None, None))
+    writer.append(CheckpointEntry(2L, "custom", ts, "app-g", None, None))
+    // the store's own appends keep its index current
+    val (own, ownJobs, _) = sparkWork(writer.findPreviousJobId("custom", "app-f"))
+    assert(own.contains(1L) && ownJobs == 0, s"own-append lookup ran $ownJobs jobs")
+
+    // a new instance reloads once (one scan), then answers from memory
+    val reader = new ParquetCheckpointStore(spark, path)
+    val (first, firstJobs, _) = sparkWork(reader.findPreviousJobId("custom", "app-g"))
+    assert(first.contains(2L) && firstJobs == 1, s"reload ran $firstJobs jobs")
+    val (again, againJobs, _) = sparkWork(reader.findPreviousJobId("custom", "app-f"))
+    assert(again.contains(1L) && againJobs == 0, s"unchanged lookup ran $againJobs jobs")
+    val (none, noneJobs, _) = sparkWork(
+      new ParquetCheckpointStore(spark, s"$root/no-such-checkpoint").findPreviousJobId("custom", "app-f"))
+    assert(none.isEmpty && noneJobs == 0)
+
+    // the JDBC store's lookup is a prepared statement, not a Spark job
+    val jdbc = new JdbcCheckpointStore(spark, s"jdbc:derby:$root/ckpt_db6;create=true")
+    jdbc.append(CheckpointEntry(3L, "custom", ts, "app-f", None, None))
+    val (viaJdbc, jdbcJobs, _) = sparkWork(jdbc.findPreviousJobId("custom", "app-f"))
+    assert(viaJdbc.contains(3L) && jdbcJobs == 0, s"JDBC lookup ran $jdbcJobs jobs")
+  }
+
+  test("an entry another store instance appends is seen by the next lookup") {
+    val path = s"$root/checkpoints7"
+    val a = new ParquetCheckpointStore(spark, path)
+    val b = new ParquetCheckpointStore(spark, path)
+    a.append(CheckpointEntry(10L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "app-h", None, None))
+    assert(a.findPreviousJobId("custom", "app-h").contains(10L))
+    assert(b.findPreviousJobId("custom", "app-h").contains(10L))
+    b.append(CheckpointEntry(11L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), "app-h", Some(10L), None))
+    assert(a.findPreviousJobId("custom", "app-h").contains(11L))
+    a.append(CheckpointEntry(12L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 12:00:00"), "app-h", Some(11L), None))
+    assert(b.findPreviousJobId("custom", "app-h").contains(12L))
+    assert(a.findPreviousJobId("custom", "app-h").contains(12L))
+    // b commits a later entry, then a appends before looking up again:
+    // a must not take b's file as its own
+    b.append(CheckpointEntry(13L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 14:00:00"), "app-h", Some(12L), None))
+    a.append(CheckpointEntry(14L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 13:00:00"), "app-h", Some(12L), None))
+    assert(a.findPreviousJobId("custom", "app-h").contains(13L))
+  }
+
+  test("checkpoint tie-break: ts DESC, then job_id DESC") {
+    val path = s"$root/checkpoints8"
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val t2 = java.sql.Timestamp.valueOf("2024-01-01 10:00:01")
+    val store = new ParquetCheckpointStore(spark, path)
+    // equal ts: the greater job_id wins, in either append order
+    store.append(CheckpointEntry(7L, "custom", t1, "app-i", None, None))
+    store.append(CheckpointEntry(5L, "custom", t1, "app-i", None, None))
+    // a later ts beats a greater job_id
+    store.append(CheckpointEntry(9L, "transaction", t1, "app-i", None, None))
+    store.append(CheckpointEntry(3L, "transaction", t2, "app-i", None, None))
+    for (s <- Seq(store, new ParquetCheckpointStore(spark, path))) {
+      assert(s.findPreviousJobId("custom", "app-i").contains(7L))
+      assert(s.findPreviousJobId("transaction", "app-i").contains(3L))
+    }
+  }
+
+  test("a job whose files hold zero records halts with no checkpoint and no data file") {
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints9",
+      warehouseRoot = s"$root/warehouse9",
+      tenants = Seq(TenantConfig("app-z", "Dataset_Z")),
+      reportTypes = Seq("custom"))
+    // a non-empty gzip file that decompresses to nothing, then a job
+    // with data behind it
+    writeJob("app-z", "custom", 601, rows = 0, gzip = true)
+    writeJob("app-z", "custom", 602, rows = 4, gzip = false)
+    val store = new ParquetCheckpointStore(spark, cfg.checkpointPath)
+    val job = IngestJob(spark, cfg, store,
+      new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier)
+    assert(job.run("app-z", "custom") == 0, "sweep must not advance past the zero-row job")
+    assert(store.findPreviousJobId("custom", "app-z").isEmpty)
+    assert(dataFilesUnder(new File(cfg.checkpointPath)).isEmpty)
+    assert(dataFilesUnder(new File(cfg.warehouseRoot)).isEmpty,
+      s"zero-row write committed ${dataFilesUnder(new File(cfg.warehouseRoot))}")
   }
 
   test("unknown tenant is rejected") {
