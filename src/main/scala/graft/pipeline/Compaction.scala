@@ -65,7 +65,11 @@ object Compaction {
     spark.read.parquet(dir)
       .repartition(targetParts)
       .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(path, true)
+    // a rename onto a directory that still exists would move the
+    // compacted copy INSIDE it, so a failed delete must stop here
+    if (!fs.delete(path, true))
+      throw new java.io.IOException(
+        s"compaction could not delete $path; compacted data is at $tmp")
     if (!fs.rename(tmp, path))
       throw new java.io.IOException(
         s"compaction rename failed; compacted data is at $tmp")

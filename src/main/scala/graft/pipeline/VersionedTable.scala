@@ -4,16 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned parquet table with ATOMIC publish, time travel, and
-  * vacuum — the concurrent-reader upgrade over
-  * [[graft.streaming.AtomicPublish]]'s write-aside swap (round-13,
-  * VERDICT r12 item 2's "version-pointer file for a truly atomic
-  * swap" option): the swap variant has a moment where the live
-  * directory is being replaced, so a reader that listed files just
-  * before the swap can lose them mid-scan; here a publish NEVER
-  * touches existing data — readers keep scanning the version they
-  * resolved for as long as vacuum retention allows.
+  * vacuum. A publish never touches existing data, so readers keep
+  * scanning the version they resolved for as long as vacuum retention
+  * allows.
   *
-  * Layout (round-14 protocol — multi-writer-safe and rename-free):
+  * Layout (multi-writer-safe and rename-free):
   *
   *   - `table/_v/<zero-padded version>/` — parquet snapshots; a
   *     snapshot counts as COMMITTED when its writer's `_SUCCESS`
@@ -24,28 +19,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     namenode-atomic on HDFS, a conditional put on object stores).
   *     The loser's create throws, and it retries at the next number —
   *     two concurrent publishers serialize instead of silently
-  *     clobbering one another's snapshot (VERDICT r13 item 4). Only
-  *     the claim winner ever writes the version directory.
+  *     clobbering one another's snapshot. Only the claim winner ever
+  *     writes the version directory.
   *   - `table/_ptr/<version>` — the PUBLICATION record, one immutable
   *     empty file per published version, committed with the same
   *     atomic create-if-absent. No rename, no delete, no overwrite
-  *     anywhere on the publish path (VERDICT r13 item 5: the
-  *     tmp+rename pointer of rounds ≤ 13 assumed atomic rename, which
-  *     object stores do not provide; a create-exclusive marker is the
-  *     conditional-put-style commit that holds there too). The
-  *     current version is simply the MAX marker — monotone under any
-  *     writer interleaving by construction.
-  *   - `table/_CURRENT` — the round-13 pointer file, retained for
-  *     READ compatibility with tables published by older code;
-  *     resolution folds its value in but no longer writes it.
+  *     anywhere on the publish path: object stores do not provide an
+  *     atomic rename, and a create-exclusive marker is the
+  *     conditional-put-style commit that holds there too. The current
+  *     version is simply the MAX marker — monotone under any writer
+  *     interleaving by construction.
   *
-  * Resolution (fast path, per round-13 ADVICE): take the max of the
-  * `_ptr` markers and the legacy `_CURRENT` value; if that version's
-  * directory carries `_SUCCESS`, serve it — one small-dir listing,
-  * no scan of the version root. Fall back to "highest version
-  * directory whose `_SUCCESS` exists" only when the pointer state is
-  * missing, corrupt, uncommitted, or vacuumed. Every crash window
-  * self-heals:
+  * Resolution: if the max `_ptr` marker's version directory carries
+  * `_SUCCESS`, serve it — one small-dir listing, no scan of the
+  * version root. Fall back to "highest version directory whose
+  * `_SUCCESS` exists" only when the markers are missing or name a
+  * vacuumed version. Every crash window self-heals:
   *   - crash while writing version N (no `_SUCCESS`): the dir is
   *     invisible to resolution; N's claim is burned and the retry
   *     publishes N+1 — version numbers may have gaps, which no
@@ -53,9 +42,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - crash between the data commit and the marker write: the
   *     snapshot is committed but unpublished — readers keep serving
   *     the previous published version (a consistent snapshot), and
-  *     the orphan surfaces only in `versions()` / time travel;
-  *   - torn legacy pointer: ignored (parse failure falls through to
-  *     the markers / listing).
+  *     the orphan surfaces only in `versions()` / time travel.
   *
   * Readers pay one `_ptr` listing (pruned by vacuum) — at 100 TB that
   * is the metadata price that buys lock-free snapshot isolation
@@ -72,9 +59,6 @@ object VersionedTable {
   private def vRoot(tableDir: String): Path = new Path(tableDir, "_v")
 
   private def ptrRoot(tableDir: String): Path = new Path(tableDir, "_ptr")
-
-  private def legacyPointer(tableDir: String): Path =
-    new Path(tableDir, "_CURRENT")
 
   private def vDir(tableDir: String, v: Long): Path =
     new Path(vRoot(tableDir), f"$v%012d")
@@ -106,40 +90,12 @@ object VersionedTable {
       .maxOption
   }
 
-  /** Legacy `_CURRENT` value (round-13 tables). Reads to EOF — a
-    * single `InputStream.read` may legally short-read, and a split
-    * ASCII number would parse as a WRONG smaller version (round-13
-    * ADVICE). */
-  private def legacyPointerVersion(fs: FileSystem,
-      tableDir: String): Option[Long] = {
-    val p = legacyPointer(tableDir)
-    if (!fs.exists(p)) None
-    else scala.util.Try {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(64)
-        val chunk = new Array[Byte](64)
-        var n = in.read(chunk)
-        while (n >= 0) {
-          buf.write(chunk, 0, n)
-          n = in.read(chunk)
-        }
-        new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.US_ASCII).trim.toLong
-      } finally in.close()
-    }.toOption
-  }
-
-  /** The live version. Fast path: max(markers, legacy pointer) when
-    * that version's directory is committed; full max-complete scan
-    * only when the pointer state is absent, corrupt, or stale
-    * (vacuumed / never-marked legacy states). None when nothing was
-    * ever committed. */
+  /** The live version: the max marker when that version's directory
+    * is committed; otherwise (markers absent or vacuumed) the max
+    * committed version. None when nothing was ever committed. */
   def currentVersion(spark: SparkSession, tableDir: String): Option[Long] = {
     val fs = fsOf(spark, tableDir)
-    val pointed = (markerVersion(fs, tableDir).toSeq ++
-      legacyPointerVersion(fs, tableDir).toSeq).maxOption
-    pointed.filter(committed(fs, tableDir, _)) match {
+    markerVersion(fs, tableDir).filter(committed(fs, tableDir, _)) match {
       case some @ Some(_) => some
       case None => versions(spark, tableDir).maxOption
     }
@@ -195,8 +151,8 @@ object VersionedTable {
     * for replacement. A read-modify-write (read current → merge →
     * publish) must NOT ride this method: two RMW writers both basing
     * on version N would publish N+1 and N+2 with the earlier merge
-    * silently dropped (round-15 ADVICE, medium). RMW goes through
-    * [[publishRmw]], whose claim protocol linearizes the merges. */
+    * silently dropped. RMW goes through [[publishRmw]], whose claim
+    * protocol linearizes the merges. */
   def publish(df: DataFrame, tableDir: String): Long = {
     val spark = df.sparkSession
     val fs = fsOf(spark, tableDir)
@@ -237,12 +193,11 @@ object VersionedTable {
     case object SkipBurned extends ClaimPolicy
   }
 
-  /** Read-modify-write publish with OPTIMISTIC concurrency (round-15
-    * ADVICE, medium — the lost-update hole): `merge` receives the
-    * current snapshot (None before the first publish) and returns the
-    * next state; blind [[publish]] must never carry an RMW, because
-    * two writers basing on version N would publish N+1 and N+2 with
-    * the earlier merge silently dropped. Under
+  /** Read-modify-write publish with OPTIMISTIC concurrency: `merge`
+    * receives the current snapshot (None before the first publish)
+    * and returns the next state; blind [[publish]] must never carry an
+    * RMW, because two writers basing on version N would publish N+1
+    * and N+2 with the earlier merge silently dropped. Under
     * [[ClaimPolicy.Linearized]] the claim is the linearization point:
     * base is published (it was current) and the claim for base+1 is
     * exclusive, so the winner's merge provably based on the immediate
@@ -257,10 +212,10 @@ object VersionedTable {
     * to cover the longest in-flight RMW (same horizon rule as any
     * concurrent reader).
     *
-    * WAIT-BOUND SEMANTICS (round 18, ADVICE r17): `wedgeTimeoutMs`
-    * bounds STALLED time only — it resets on every head advance, so
-    * under sustained LIVE contention (the head keeps moving but this
-    * writer keeps losing the claim race) total wait is UNBOUNDED BY
+    * WAIT-BOUND SEMANTICS: `wedgeTimeoutMs` bounds STALLED time
+    * only — it resets on every head advance, so under sustained LIVE
+    * contention (the head keeps moving but this writer keeps losing
+    * the claim race) total wait is UNBOUNDED BY
     * DESIGN: every reset is the protocol making progress, and the
     * merge will land once a claim is won. Callers that need a bounded
     * publish latency pass `totalBudgetMs`; exhausting it throws a
@@ -275,10 +230,10 @@ object VersionedTable {
       (merge: Option[DataFrame] => DataFrame): Long = {
     val fs = fsOf(spark, tableDir)
     fs.mkdirs(vRoot(tableDir))
-    // The wedge deadline measures STALLED time, not total time (round
-    // 17, ADVICE r16 medium): it resets whenever the head advances —
-    // a loser that rebases several times under sustained live
-    // contention is making the protocol's intended progress, and
+    // The wedge deadline measures STALLED time, not total time: it
+    // resets whenever the head advances — a loser that rebases
+    // several times under sustained live contention is making the
+    // protocol's intended progress, and
     // burning a shared whole-call budget would throw the misleading
     // "abandoned claim?" error at a perfectly live contender,
     // directing the operator to delete a claim that is in use. Only
@@ -289,18 +244,14 @@ object VersionedTable {
       totalBudgetMs.map(ms => System.nanoTime() + ms * 1000000L)
     // rebase count: the budget-exhausted error may only claim "live
     // contention / the head kept advancing" when this writer actually
-    // lost at least one race (round 19, ADVICE r18: with a tiny budget
-    // the old text fired on the very first attempt, describing a race
-    // that never happened)
+    // lost at least one race (with a tiny budget the first attempt can
+    // expire before any race happened)
     var rebases = 0
     // When the budget expires mid-wait on a contender's claimed-but-
     // unpublished version, the writer DID lose a createExclusive race
-    // even though rebases is still 0 (round 20, ADVICE r19 #2: the r19
-    // rebases==0 message misdescribed that state as "before any claim
-    // race was lost" and dropped the delete-claim-file recovery
-    // guidance — the exact inaccuracy the r19 change set out to fix).
-    // Track the version being waited on so the budget error can name
-    // the true state and its recovery.
+    // even though rebases is still 0. Track the version being waited
+    // on so the budget error can name the true state and its recovery
+    // (deleting the claim file if its writer is dead).
     var waitingOn: Option[Long] = None
     @scala.annotation.tailrec
     def attempt(): Long = {
@@ -365,11 +316,11 @@ object VersionedTable {
         // once it publishes) or by a crashed one (wedge — refuse and
         // name it; see ClaimPolicy.Linearized)
         var advanced = currentVersion(spark, tableDir).exists(_ >= next)
-        // the wait is bounded by BOTH clocks (round 19, ADVICE r18:
-        // checking the budget only at attempt() entry let a call
-        // overshoot totalBudgetMs by up to a full wedgeTimeoutMs
-        // spent asleep here) — on budget expiry the loop exits and
-        // the entry check throws the budget error, not the wedge one
+        // the wait is bounded by BOTH clocks (checking the budget only
+        // at attempt() entry would let a call overshoot totalBudgetMs
+        // by up to a full wedgeTimeoutMs spent asleep here) — on budget
+        // expiry the loop exits and the entry check throws the budget
+        // error, not the wedge one
         def waitDeadline: Long =
           budgetDeadline.fold(deadline)(math.min(deadline, _))
         waitingOn = Some(next)

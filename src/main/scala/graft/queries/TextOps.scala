@@ -139,23 +139,14 @@ object TextOps extends QueryPack {
         expr(s"CAST(sz - (sz * $tNum + ${tDen - 1}) DIV $tDen + 1 AS INT)"))
     val pref = byDoc.select(col("doc_id"), col("source"),
       explode(slice(col("stoks"), lit(1), col("plen"))).as("tok"))
-    // Round 19 A/B note: Salting.saltedPairJoin was wired here and
-    // REVERTED on measurement. On the k=10 viral-prefix-token probe
-    // the split read 381 s / max-task 187 s / max shuffle 25M records
-    // vs 268 s / 117 s / 905k for this direct join: the viral case is
-    // OUTPUT-bound (every enumerated pair is a true pair × the prefix
-    // multiplicity), the hot keys already spread across tasks, and
-    // the salting DEFEATS the distinct's in-task partial aggregation
-    // (a pair's per-shingle copies land in different (ga, gb) groups,
-    // so the 8× multiplicity that used to collapse map-side crosses
-    // the wire — stage dump: the split plan's enumeration wrote 231M
-    // records where this plan's distinct exchange writes 25M). The
-    // stage dump also showed the REAL parallelism limiter: AQE
-    // coalesces the enumeration join to ~10 tasks on its (tiny) INPUT
-    // bytes — output-blind — which no amount of key salting undoes.
-    // saltedPairJoin remains available (SaltingSpec pins its
-    // exactly-once contract) for true single-hot-key concentration,
-    // which this corpus shape does not exhibit.
+    // A salted product split of this join measured slower on the k=10
+    // viral-prefix-token probe (381 s / max-task 187 s vs 268 s /
+    // 117 s): the viral case is OUTPUT-bound, the hot keys already
+    // spread across tasks, and salting defeats the distinct's in-task
+    // partial aggregation (the split's enumeration wrote 231M records
+    // where this plan's distinct exchange writes 25M). The real
+    // parallelism limiter is AQE coalescing the enumeration join to
+    // ~10 tasks on its tiny INPUT bytes, which key salting cannot undo.
     // (A second rejected fix, same probe: an explicit-N repartition of
     // the prefix stream — pinning the join's partition count against
     // AQE's input-based coalescing — read 81.2 s / max-task 30.6 s /

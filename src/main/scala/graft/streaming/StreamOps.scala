@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables.dec
+import graft.pipeline.VersionedTable
 
 /** Typed records for the custom-state operator. */
 case class UserEvent(user_id: Long, ts: java.sql.Timestamp)
@@ -72,77 +73,66 @@ object StreamOps {
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Streaming CDC apply: each micro-batch MERGEs into a parquet
-    * keep-latest table through the batch [[graft.operators.Upsert]] —
+  /** An empty frame with the batch's schema: the base a sink merges
+    * into before its table's first publish. */
+  private def emptyLike(batch: DataFrame): DataFrame =
+    batch.sparkSession.createDataFrame(
+      new java.util.ArrayList[Row](), batch.schema)
+
+  /** The per-batch body shared by the versioned sinks: `merge` folds
+    * the micro-batch into the current snapshot (None before the first
+    * publish) and the result commits as the table's next version
+    * through [[VersionedTable.publishRmw]]; `keepVersions` > 0 then
+    * vacuums down to the newest N. SkipBurned because each sink table
+    * has exactly one writer, this query's serial batches, so a held
+    * claim can only be its own crash debris; two sinks on one table
+    * would need ClaimPolicy.Linearized. */
+  private[graft] def publishBatch(tableDir: String, keepVersions: Int,
+      merge: (Option[DataFrame], DataFrame) => DataFrame)
+      (batch: Dataset[Row], batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    VersionedTable.publishRmw(spark, tableDir,
+      policy = VersionedTable.ClaimPolicy.SkipBurned) { base =>
+      merge(base, batch.toDF())
+    }: Unit
+    if (keepVersions > 0)
+      VersionedTable.vacuum(spark, tableDir, keepVersions): Unit
+  }
+
+  private def versionedSink(stream: DataFrame, tableDir: String,
+      keepVersions: Int)(merge: (Option[DataFrame], DataFrame) => DataFrame)
+      : DataStreamWriter[Row] =
+    stream.writeStream.outputMode(OutputMode.Append)
+      .foreachBatch(publishBatch(tableDir, keepVersions, merge) _)
+
+  /** [[upsertSink]]'s merge: the batch's rows replace same-key rows
+    * of the snapshot, latest `versionCol` wins. */
+  private[graft] def keepLatest(keys: Seq[String], versionCol: String,
+      tiebreak: Seq[Column]): (Option[DataFrame], DataFrame) => DataFrame =
+    (base, batch) => graft.operators.Upsert(
+      base.getOrElse(emptyLike(batch)), batch, keys, versionCol, tiebreak)
+
+  /** Streaming CDC apply: each micro-batch MERGEs into a keep-latest
+    * [[VersionedTable]] through the batch [[graft.operators.Upsert]],
     * the foreachBatch loop a warehouse ingestion runs when the sink
-    * has no native MERGE. Idempotent at the table level: re-applying a
-    * delivered-again batch (at-least-once ingest) yields the same
-    * keep-latest rows. Durability is [[AtomicPublish]]'s write-aside
-    * swap: the merged state lands COMPLETELY beside the table before
-    * the old directory is replaced, so no crash instant leaves the
-    * table empty or partial (and the merge never reads files mid-
-    * replacement — the tmp write IS the materialization the old
-    * localCheckpoint-before-overwrite discipline paid a second pass
-    * for). This demo rewrites the whole table; at warehouse scale the
-    * same loop targets only affected partitions via dynamic partition
-    * overwrite (pipeline.ParquetWarehouseSink). */
-  def upsertSink(updates: DataFrame, tableDir: String, keys: Seq[String],
-      versionCol: String, tiebreak: Seq[org.apache.spark.sql.Column] = Nil)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val base = AtomicPublish.read(spark, tableDir).getOrElse(
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema))
-        AtomicPublish.publish(
-          graft.operators.Upsert(base, batch.toDF(), keys, versionCol, tiebreak),
-          tableDir)
-        ()
-      }
-
-
-  /** [[upsertSink]] through [[graft.pipeline.VersionedTable]]: each
-    * micro-batch publishes the merged keep-latest state as a NEW
-    * version behind an atomic pointer — concurrent readers keep their
-    * resolved snapshot mid-scan while the stream advances (the swap
-    * sink's one remaining reader hazard), every applied batch is a
-    * time-travelable snapshot, and vacuum bounds retention. Same
-    * at-least-once idempotency story: a replayed batch re-merges to
-    * value-equal state (one redundant version, identical bytes — the
-    * version NUMBER is the only side effect of replay).
+    * has no native MERGE. Each applied batch is a new version behind
+    * an atomic marker, so concurrent readers keep the snapshot they
+    * resolved while the stream advances, and every applied batch
+    * stays time-travelable until vacuumed. Idempotent at the table
+    * level: a re-delivered batch (at-least-once ingest) re-merges to
+    * value-equal state, so one redundant version is the only side
+    * effect of replay.
     *
-    * `keepVersions` (round 14) bounds retention: a versioned sink
-    * writes one snapshot per micro-batch, which is unbounded storage
-    * on a long-lived stream; > 0 vacuums down to the newest N after
-    * each publish (N must cover the longest concurrent reader — the
-    * snapshot-isolation horizon is a RETENTION policy, exactly as in
-    * any log-structured table format). 0 = keep everything. */
-  def upsertSinkVersioned(updates: DataFrame, tableDir: String,
-      keys: Seq[String], versionCol: String,
-      tiebreak: Seq[org.apache.spark.sql.Column] = Nil,
-      keepVersions: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // publishRmw, not blind publish (round-15 ADVICE: the RMW
-        // lost-update hole). SkipBurned because each sink table has
-        // EXACTLY ONE writer — this query's serial batches — so a held
-        // claim is only its own crash debris and recovery must skip
-        // it; two sinks on one table are out of contract (they'd need
-        // ClaimPolicy.Linearized, see its scaladoc).
-        graft.pipeline.VersionedTable.publishRmw(spark, tableDir,
-          policy = graft.pipeline.VersionedTable.ClaimPolicy.SkipBurned) { baseOpt =>
-          val base = baseOpt.getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema))
-          graft.operators.Upsert(base, batch.toDF(), keys, versionCol,
-            tiebreak)
-        }: Unit
-        if (keepVersions > 0)
-          graft.pipeline.VersionedTable
-            .vacuum(spark, tableDir, keepVersions): Unit
-      }
+    * `keepVersions` bounds retention: one snapshot per micro-batch is
+    * unbounded storage on a long-lived stream; > 0 vacuums down to
+    * the newest N after each publish (N must cover the longest
+    * concurrent reader). 0 keeps everything. Read the table with
+    * [[VersionedTable.read]]. */
+  def upsertSink(updates: DataFrame, tableDir: String, keys: Seq[String],
+      versionCol: String, tiebreak: Seq[Column] = Nil,
+      keepVersions: Int = 0): DataStreamWriter[Row] =
+    versionedSink(updates, tableDir, keepVersions)(
+      keepLatest(keys, versionCol, tiebreak))
 
   /** foreachBatch SCD2 (type-2) dimension MAINTENANCE: the streaming
     * form of q_scd2_apply — each micro-batch of (key, value, eff_from)
@@ -150,37 +140,22 @@ object StreamOps {
     * one-row-per-key precondition; latest eff_from wins, value as the
     * deterministic tiebreak) and applied to the current dimension:
     * close the changed keys' open intervals, insert new open versions,
-    * no-op value-equal rows. Durability is
-    * [[graft.pipeline.VersionedTable]] (round-14, VERDICT r13 item 3:
-    * the write-aside swap this sink rode through round 13 had a
-    * reader-mid-swap window; the versioned publish never touches live
-    * data, so concurrent readers keep their snapshot and every
-    * applied batch is time-travelable). At-least-once replay is
-    * absorbed by ScdApply's value-equal no-op — a re-delivered batch
-    * finds every change already current and republishes value-equal
-    * state; the version NUMBER is the only side effect of replay
-    * (StreamingIngestSpec). */
+    * no-op value-equal rows. Publishes through [[VersionedTable]] like
+    * [[upsertSink]]. At-least-once replay is absorbed by ScdApply's
+    * value-equal no-op — a re-delivered batch finds every change
+    * already current and republishes value-equal state; the version
+    * NUMBER is the only side effect of replay (StreamingIngestSpec). */
   def scd2Sink(changes: DataFrame, tableDir: String, key: String,
       value: String, from: String, to: String, keepVersions: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val emptyDelta = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema)
-        val collapsed = graft.operators.Upsert(
-          emptyDelta, batch.toDF(), Seq(key), from,
-          tiebreak = Seq(col(value).desc))
-        graft.pipeline.VersionedTable.publishRmw(spark, tableDir,
-          policy = graft.pipeline.VersionedTable.ClaimPolicy.SkipBurned) { baseOpt =>
-          val base = baseOpt.getOrElse(
-            emptyDelta.withColumn(to, lit(null).cast("timestamp")))
-          graft.operators.ScdApply(base, collapsed, key, value, from, to)
-        }: Unit
-        if (keepVersions > 0)
-          graft.pipeline.VersionedTable
-            .vacuum(spark, tableDir, keepVersions): Unit
-      }
+      : DataStreamWriter[Row] =
+    versionedSink(changes, tableDir, keepVersions) { (base, batch) =>
+      val collapsed = graft.operators.Upsert(emptyLike(batch), batch,
+        Seq(key), from, tiebreak = Seq(col(value).desc))
+      graft.operators.ScdApply(
+        base.getOrElse(
+          emptyLike(batch).withColumn(to, lit(null).cast("timestamp"))),
+        collapsed, key, value, from, to)
+    }
 
   /** Streaming CDC apply — the foreachBatch form of q_cdc_apply: each
     * micro-batch of (key, seq, 'I'|'U'|'D', payload) ops merges into a
@@ -194,34 +169,21 @@ object StreamOps {
     * every per-key contest, and a tombstone keeps a replayed older
     * insert from resurrecting a deleted key. Readers filter tombstones
     * ([[readCdcTable]]); tombstone retention is a compaction policy,
-    * not a correctness input. Durability is
-    * [[graft.pipeline.VersionedTable]] (round-14, VERDICT r13 item 3
-    * — no reader-mid-swap window, every applied batch a
-    * time-travelable snapshot). */
+    * not a correctness input. Publishes through [[VersionedTable]]
+    * like [[upsertSink]]. */
   def cdcSink(ops: DataFrame, tableDir: String, key: String, seq: String,
-      op: String, keepVersions: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ops.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        graft.pipeline.VersionedTable.publishRmw(spark, tableDir,
-          policy = graft.pipeline.VersionedTable.ClaimPolicy.SkipBurned) { baseOpt =>
-          val base = baseOpt.getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema))
-          graft.operators.CdcApply
-            .winners(base.unionByName(batch.toDF()), key, seq, op)
-        }: Unit
-        if (keepVersions > 0)
-          graft.pipeline.VersionedTable
-            .vacuum(spark, tableDir, keepVersions): Unit
-      }
+      op: String, keepVersions: Int = 0): DataStreamWriter[Row] =
+    versionedSink(ops, tableDir, keepVersions) { (base, batch) =>
+      graft.operators.CdcApply.winners(
+        base.getOrElse(emptyLike(batch)).unionByName(batch), key, seq, op)
+    }
 
   /** Live (non-tombstone) rows of a [[cdcSink]]-maintained table —
     * the current committed snapshot, resolved lock-free against
     * concurrent publishes. */
   def readCdcTable(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, op: String): DataFrame =
-    graft.pipeline.VersionedTable.read(spark, tableDir)
+    VersionedTable.read(spark, tableDir)
       .getOrElse(sys.error(s"no committed CDC table at $tableDir"))
       .filter(col(op) =!= "D")
 

@@ -2,9 +2,31 @@ package graft
 
 import java.io.File
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Compaction
+
+/** A local filesystem whose `delete` of one chosen path reports
+  * failure and deletes nothing — the shim behind the failed-delete
+  * compaction test. Must be top-level with a no-arg constructor —
+  * Hadoop instantiates it reflectively from `fs.nodelete.impl`. */
+class NoDeleteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "nodelete"
+  override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (p.toUri.getPath == NoDeleteFs.refused) false
+    else super.delete(p, recursive)
+  // plain statuses: the raw local ones load permissions through a
+  // java.io.File of the path's URI, which rejects any scheme but file
+  override def listStatus(p: Path): Array[FileStatus] =
+    super.listStatus(p).map(s => new FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
+}
+
+object NoDeleteFs {
+  @volatile var refused: String = ""
+}
 
 /** Compaction must reduce file count without changing data, and be a
   * no-op when the directory is already compact. */
@@ -48,5 +70,27 @@ class CompactionSpec extends SparkSuite {
     val n = Compaction.compact(spark, dir, targetBytes = totalBytes / 3)
     assert(n >= 3 && n < 12, s"got $n files")
     assert(parquetFiles(dir).size == n)
+  }
+
+  test("a failed delete of the old directory stops the swap and names " +
+      "the compacted copy") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.nodelete.impl", classOf[NoDeleteFs].getName)
+    val dir = new File("target/test-fixtures/compact/nodelete").getAbsolutePath
+    Tables.orders(spark, Sf).repartition(8).write.mode("overwrite").parquet(dir)
+    val rows = spark.read.parquet(dir).count()
+    NoDeleteFs.refused = dir
+    val e =
+      try intercept[java.io.IOException] {
+        Compaction.compact(spark, s"nodelete://$dir", targetBytes = 1L << 30)
+      } finally NoDeleteFs.refused = ""
+    assert(e.getMessage.contains(s"$dir.compact-tmp"), e.getMessage)
+    // a rename onto the surviving directory would have moved the
+    // compacted copy inside it; the old table must stay as it was
+    assert(!new File(dir, "nodelete.compact-tmp").exists,
+      "compacted copy was moved inside the old table")
+    assert(parquetFiles(dir).size == 8)
+    assert(spark.read.parquet(dir).count() == rows)
+    assert(spark.read.parquet(s"$dir.compact-tmp").count() == rows)
   }
 }

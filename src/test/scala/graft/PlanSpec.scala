@@ -157,6 +157,31 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("AQE skew join splits the mega-key partition at runtime") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // AQE detects the oversized partition from shuffle stats and
+    // splits it (thresholds forced low so fixture-scale stats trigger
+    // the optimization)
+    withSQLConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val skewed = (Seq.fill(30000)(0L) ++ (1L to 100L)).toDF("k")
+        .select(col("k"), (col("k") + 1).as("v"))
+      val dim = (0L to 100L).toDF("k").select(col("k"), (col("k") * 2).as("w"))
+      val joined = skewed.join(dim, "k")
+      joined.collect()
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("skew=true"),
+        "AQE did not mark the join as skew-optimized\n" + plan.take(3000))
+    }
+  }
+
   test("partitioned window specs everywhere data-scale windows run") {
     // Every Window over table-sized input must carry a partitionSpec.
     // q_win_ntile is exempt BY DESIGN: its GlobalRank offsets window

@@ -2,7 +2,7 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import graft.pipeline.{ParquetWarehouseSink, PipelineConfig, TenantConfig}
+import graft.pipeline.{ParquetWarehouseSink, PipelineConfig, TenantConfig, VersionedTable}
 import graft.streaming.{StreamingIngest, StreamOps}
 
 /** Versioned CDC record for the foreachBatch upsert test (top-level —
@@ -86,7 +86,7 @@ class StreamingIngestSpec extends SparkSuite {
     val q = StreamOps.upsertSink(mem.toDF(), dir, Seq("k"), "ver")
       .option("checkpointLocation", s"$root/stream_upsert_ck")
       .start()
-    def table() = spark.read.parquet(dir).as[Up].collect()
+    def table() = VersionedTable.read(spark, dir).get.as[Up].collect()
       .map(u => u.k -> ((u.ver, u.v))).toMap
     try {
       mem.addData(Up(1, 1, "a"), Up(2, 1, "b"))
@@ -120,24 +120,21 @@ class StreamingIngestSpec extends SparkSuite {
     val ck = s"$root/stream_restart_ck"
     @volatile var crashArmed = true // foreachBatch body runs on the driver
     val mem = MemoryStream[Up](spark)
+    // upsertSink's own per-batch body, with a crash injected after it
+    val upsert = StreamOps.publishBatch(dir, keepVersions = 0,
+      StreamOps.keepLatest(Seq("k"), "ver", Nil)) _
     def start() = mem.toDF().writeStream
       .option("checkpointLocation", ck)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val rows = batch.toDF().as[Up].collect()
-        val base =
-          if (new java.io.File(dir).exists) spark.read.parquet(dir)
-          else spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema)
-        graft.operators.Upsert(base, batch.toDF(), Seq("k"), "ver")
-          .localCheckpoint()
-          .write.mode("overwrite").parquet(dir)
+        upsert(batch, id)
         if (crashArmed && rows.exists(_.k == 99L)) {
           crashArmed = false
           throw new RuntimeException("injected crash after sink write, before commit")
         }
       }
       .start()
-    def table() = spark.read.parquet(dir).as[Up].collect()
+    def table() = VersionedTable.read(spark, dir).get.as[Up].collect()
       .map(u => u.k -> ((u.ver, u.v))).toSeq
 
     val q1 = start()
@@ -161,6 +158,11 @@ class StreamingIngestSpec extends SparkSuite {
       assert(t.toMap ==
         Map(1L -> ((2L, "a2")), 2L -> ((1L, "b")), 99L -> ((1L, "x"))))
       assert(t.size == 3, s"replay duplicated rows: $t")
+      // the replay's only side effect is one value-equal version
+      assert(VersionedTable.versions(spark, dir) === Seq(1L, 2L, 3L))
+      assert(VersionedTable.readVersion(spark, dir, 3).as[Up].collect()
+        .toSet === VersionedTable.readVersion(spark, dir, 2).as[Up]
+        .collect().toSet)
       // and the stream continues normally after recovery
       mem.addData(Up(3, 1, "c"))
       q2.processAllAvailable()
@@ -168,190 +170,6 @@ class StreamingIngestSpec extends SparkSuite {
         Map(1L -> ((2L, "a2")), 2L -> ((1L, "b")), 3L -> ((1L, "c")),
           99L -> ((1L, "x"))))
     } finally q2.stop()
-  }
-
-  test("mid-overwrite crash windows: the table survives every instant " +
-      "of the atomic publish swap") {
-    // Round-12 verdict, "what's wrong" #1: a crash DURING a plain
-    // overwrite (after Spark clears the directory, before the new
-    // files commit) left the table empty/partial and the replayed
-    // batch merged into that corrupted state. AtomicPublish's
-    // write-aside swap has three crash windows; each is injected here
-    // by reproducing its exact on-disk state, then the read path and a
-    // restarted stream batch must both come out exactly-once.
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.AtomicPublish
-    import org.apache.hadoop.fs.Path
-    val dir = s"$root/atomic_publish_table"
-    val ck = s"$root/atomic_publish_ck"
-    val tmp = new Path(dir + ".publish-tmp")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def table() = spark.read.parquet(dir).as[Up].collect()
-      .map(u => u.k -> ((u.ver, u.v))).toMap
-    val mem = MemoryStream[Up](spark)
-    def start() = StreamOps.upsertSink(mem.toDF(), dir, Seq("k"), "ver")
-      .option("checkpointLocation", ck).start()
-
-    // establish v1 through the real sink
-    val q1 = start()
-    try {
-      mem.addData(Up(1, 1, "a"), Up(2, 1, "b"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val v1 = Map(1L -> ((1L, "a")), 2L -> ((1L, "b")))
-    assert(table() == v1)
-
-    // WINDOW A — crash during the tmp write: incomplete tmp (junk
-    // file, no _SUCCESS), live table intact. Reads must ignore the
-    // junk; the next publish overwrites it.
-    fs.mkdirs(tmp)
-    val junk = fs.create(new Path(tmp, "part-00000.parquet"))
-    junk.write(Array[Byte](1, 2, 3)); junk.close()
-    assert(!AtomicPublish.pendingSwap(spark, dir),
-      "an incomplete tmp is not a pending swap")
-    assert(AtomicPublish.read(spark, dir).get.as[Up].collect()
-      .map(u => u.k -> ((u.ver, u.v))).toMap == v1)
-    val q2 = start()
-    try {
-      mem.addData(Up(1, 2, "a2"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val v2 = Map(1L -> ((2L, "a2")), 2L -> ((1L, "b")))
-    assert(table() == v2)
-    assert(!fs.exists(tmp), "publish must consume the tmp dir")
-
-    // WINDOW B — crash between tmp completion and the delete of the
-    // live dir: both directories complete. Reads serve the OLD state;
-    // the replayed merge recomputes from it and the swap completes.
-    val nextB = graft.operators.Upsert(spark.read.parquet(dir),
-      Seq(Up(3, 1, "c")).toDF(), Seq("k"), "ver")
-    nextB.write.mode("overwrite").parquet(tmp.toString)
-    assert(fs.exists(new Path(tmp, "_SUCCESS")))
-    assert(AtomicPublish.read(spark, dir).get.as[Up].collect()
-      .map(u => u.k -> ((u.ver, u.v))).toMap == v2,
-      "pre-swap reads must serve the old complete state")
-    val q3 = start()
-    try {
-      mem.addData(Up(3, 1, "c"))
-      q3.processAllAvailable()
-    } finally q3.stop()
-    val v3 = v2 + (3L -> ((1L, "c")))
-    assert(table() == v3)
-    assert(!fs.exists(tmp))
-
-    // WINDOW C — crash between the delete and the rename: live dir
-    // MISSING, tmp complete. Reads serve the tmp IN PLACE (pure — no
-    // reader-side mutation; round-15 ADVICE high), and a restarted
-    // stream batch merges onto it, its publish completing the swap.
-    val nextC = graft.operators.Upsert(spark.read.parquet(dir),
-      Seq(Up(4, 1, "d")).toDF(), Seq("k"), "ver")
-        .localCheckpoint() // pin: the source files are deleted next
-    nextC.write.mode("overwrite").parquet(tmp.toString)
-    assert(fs.delete(new Path(dir), true))
-    assert(!fs.exists(new Path(dir)), "window C: live table gone from disk")
-    val v4 = v3 + (4L -> ((1L, "d")))
-    assert(AtomicPublish.read(spark, dir).get.as[Up].collect()
-      .map(u => u.k -> ((u.ver, u.v))).toMap == v4,
-      "read must serve the unswapped tmp state")
-    assert(AtomicPublish.pendingSwap(spark, dir))
-    assert(!fs.exists(new Path(dir)) && fs.exists(tmp),
-      "read must be pure: no reader-side rename or delete")
-    val q4 = start()
-    try {
-      mem.addData(Up(4, 2, "d2"))
-      q4.processAllAvailable()
-    } finally q4.stop()
-    val v5 = v4 + (4L -> ((2L, "d2")))
-    assert(table() == v5,
-      "post-crash batch must merge onto the tmp-served state")
-    assert(fs.exists(new Path(dir, "_SUCCESS")) && !fs.exists(tmp),
-      "the replayed batch's publish must complete the pending swap")
-
-    // WINDOW D (round-13 ADVICE, medium) — crash MIDWAY through the
-    // recursive delete of the live directory: the marker is gone but a
-    // PARTIAL remnant of the old table still exists on disk (directory
-    // delete is not atomic). Validity is the _SUCCESS marker, so
-    // reads must ignore the remnant and serve the complete tmp — the
-    // old existence-gated heal served the partial state as live and
-    // the replayed merge then committed the corruption.
-    val nextD = graft.operators.Upsert(spark.read.parquet(dir),
-      Seq(Up(5, 1, "e")).toDF(), Seq("k"), "ver")
-        .localCheckpoint() // pin: the source files are mutilated next
-    nextD.write.mode("overwrite").parquet(tmp.toString)
-    assert(fs.delete(new Path(dir, "_SUCCESS"), false),
-      "window D: marker invalidated first")
-    val dataFiles = fs.listStatus(new Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("part-"))
-    assert(dataFiles.nonEmpty)
-    // delete SOME data files, keep others: the mid-delete remnant
-    dataFiles.take(math.max(1, dataFiles.size / 2))
-      .foreach(f => assert(fs.delete(f.getPath, false)))
-    assert(fs.exists(new Path(dir)), "window D needs a partial remnant")
-    val v6 = v5 + (5L -> ((1L, "e")))
-    assert(AtomicPublish.read(spark, dir).get.as[Up].collect()
-      .map(u => u.k -> ((u.ver, u.v))).toMap == v6,
-      "read must ignore the partial remnant and serve the complete tmp")
-    assert(fs.exists(new Path(dir)) && fs.exists(tmp),
-      "read must be pure: the remnant and tmp stay as the crash left them")
-    val q5 = start()
-    try {
-      mem.addData(Up(5, 2, "e2"))
-      q5.processAllAvailable()
-    } finally q5.stop()
-    assert(table() == v6 + (5L -> ((2L, "e2"))),
-      "post-crash batch must merge onto the tmp state, not the remnant")
-    assert(fs.exists(new Path(dir, "_SUCCESS")) && !fs.exists(tmp) &&
-      !fs.exists(new Path(dir + ".publish-tmp2")),
-      "the replayed batch's publish must complete the swap through the " +
-        "tmp2 aside and consume both aside dirs")
-  }
-
-  test("a reader racing EVERY window of a live publish never destroys " +
-      "the table (round-15 ADVICE high: the heal/publish interleaving)") {
-    // The old reader-side heal deleted the target and renamed the tmp
-    // in while the publisher sat between its marker delete and its
-    // recursive delete — the publisher then destroyed the just-healed
-    // table with the tmp already consumed: total loss. Reads are now
-    // PURE, so the interleaving is driven at both injection points and
-    // must observe correct data while mutating nothing.
-    import spark.implicits._
-    import graft.streaming.AtomicPublish
-    import org.apache.hadoop.fs.Path
-    val dir = s"$root/atomic_publish_race"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def snap(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.as[Long].collect().toSet
-    AtomicPublish.publish(Seq(1L, 2L).toDF("v"), dir)
-    assert(snap(AtomicPublish.read(spark, dir).get) === Set(1L, 2L))
-
-    val newState = Seq(1L, 2L, 3L).toDF("v")
-    var sawAfterInvalidate: Set[Long] = null
-    var sawAfterClear: Set[Long] = null
-    AtomicPublish.publishWithHooks(newState, dir,
-      afterInvalidate = () => {
-        // marker gone, old dir still on disk: the reader must resolve
-        // to the complete tmp (the new state) and mutate NOTHING
-        sawAfterInvalidate = snap(AtomicPublish.read(spark, dir).get)
-        assert(fs.exists(new Path(dir)), "reader must not delete the old dir")
-        assert(fs.exists(new Path(dir + ".publish-tmp", "_SUCCESS")),
-          "reader must not consume the tmp mid-publish")
-      },
-      afterClear = () => {
-        // old dir deleted, rename not yet done: same pure tmp read —
-        // under the old heal this was the window that lost the table
-        sawAfterClear = snap(AtomicPublish.read(spark, dir).get)
-        assert(!fs.exists(new Path(dir)))
-        assert(fs.exists(new Path(dir + ".publish-tmp", "_SUCCESS")),
-          "reader must not rename the tmp away from the publisher")
-      })
-    assert(sawAfterInvalidate === Set(1L, 2L, 3L))
-    assert(sawAfterClear === Set(1L, 2L, 3L))
-    assert(snap(AtomicPublish.read(spark, dir).get) === Set(1L, 2L, 3L),
-      "publish must complete despite the racing reader")
-    assert(fs.exists(new Path(dir, "_SUCCESS")) &&
-      !fs.exists(new Path(dir + ".publish-tmp")),
-      "the swap must consume the tmp exactly once")
   }
 
   test("foreachBatch incremental dedup: micro-batches probe a FROZEN " +
@@ -532,7 +350,7 @@ class StreamingIngestSpec extends SparkSuite {
     def t(h: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
     // the dimension now lives in a VersionedTable (round 14) — read the
     // current committed snapshot
-    def dim() = graft.pipeline.VersionedTable.read(spark, dir).get
+    def dim() = VersionedTable.read(spark, dir).get
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[Double]("v"),
         r.getAs[java.sql.Timestamp]("eff_from"),
         Option(r.getAs[java.sql.Timestamp]("eff_to")))).toSet
@@ -601,14 +419,12 @@ class StreamingIngestSpec extends SparkSuite {
   test("versioned sink crash matrix: the cdc and scd2 sinks survive " +
       "every interrupted-publish window; each applied batch is " +
       "time-travelable") {
-    // Round-14 (VERDICT r13 item 3): cdcSink/scd2Sink publish through
-    // VersionedTable, so their crash windows are the versioned
-    // protocol's — injected here ON THE SINKS' OWN TABLES, the
-    // analogue of the swap-sink window test above.
+    // Every foreachBatch sink publishes through VersionedTable, so
+    // their crash windows are the versioned protocol's — injected here
+    // ON THE SINKS' OWN TABLES.
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.hadoop.fs.Path
-    import graft.pipeline.VersionedTable
     val dir = s"$root/stream_cdc_versioned"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mem = MemoryStream[CdcOp](spark)
@@ -712,6 +528,36 @@ class StreamingIngestSpec extends SparkSuite {
     // time travel reaches the pre-change dimension
     assert(VersionedTable.readVersion(spark, sdir, 1)
       .collect().map(_.getAs[Double]("v")).toSeq === Seq(10.0))
+
+    // upsertSink, window 1: a burned claim plus a junk directory leave
+    // the keep-latest table readable, and the next batch commits above
+    val udir = s"$root/stream_upsert_versioned"
+    val umem = MemoryStream[Up](spark)
+    def ustart() = StreamOps.upsertSink(umem.toDF(), udir, Seq("k"), "ver")
+      .option("checkpointLocation", s"$root/stream_upsert_versioned_ck")
+      .start()
+    def utable() = VersionedTable.read(spark, udir).get.as[Up].collect()
+      .map(u => u.k -> ((u.ver, u.v))).toMap
+    val uq = ustart()
+    try {
+      umem.addData(Up(1, 1, "a"), Up(2, 1, "b"))
+      uq.processAllAvailable()
+    } finally uq.stop()
+    fs.create(new Path(s"$udir/_v/000000000002.claim"), true).close()
+    val ujunk = new Path(s"$udir/_v/000000000002")
+    fs.mkdirs(ujunk)
+    val ujunkFile = fs.create(new Path(ujunk, "part-00000.parquet"))
+    ujunkFile.write(Array[Byte](7)); ujunkFile.close()
+    assert(utable() === Map(1L -> ((1L, "a")), 2L -> ((1L, "b"))))
+    val uq2 = ustart()
+    try {
+      umem.addData(Up(1, 2, "a2"))
+      uq2.processAllAvailable()
+    } finally uq2.stop()
+    assert(utable() === Map(1L -> ((2L, "a2")), 2L -> ((1L, "b"))))
+    assert(VersionedTable.currentVersion(spark, udir) === Some(3L),
+      "the burned claim must not be reused")
+    assert(VersionedTable.versions(spark, udir) === Seq(1L, 3L))
   }
 
   test("foreachBatch ANN ingest: micro-batches of vectors enter the " +

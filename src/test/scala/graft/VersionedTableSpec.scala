@@ -90,7 +90,7 @@ class VersionedTableSpec extends SparkSuite {
     // window 2 — crash between the data commit and the marker write:
     // version 5 claimed + committed but never published. Readers keep
     // serving the last PUBLISHED version (consistent snapshot
-    // semantics, round-13 ADVICE fast path); the orphan stays
+    // semantics); the orphan stays
     // reachable via versions()/time travel; the next publish lands
     // above it.
     fs.create(new Path(s"$t/_v/000000000005.claim"), true).close()
@@ -102,22 +102,10 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.publish(df(1L -> "e"), t) === 6L)
     assert(readMap(VersionedTable.read(spark, t).get) === Map(1L -> "e"))
 
-    // window 3 — torn/garbage legacy pointer: ignored, markers win
-    val out = fs.create(new Path(s"$t/_CURRENT"), true)
-    out.write("garbage".getBytes); out.close()
-    assert(readMap(VersionedTable.read(spark, t).get) === Map(1L -> "e"))
-
-    // window 4 — markers vacuumed/absent entirely: fall back to the
-    // max-complete scan (legacy-table read compatibility)
+    // window 3 — markers absent entirely: fall back to the
+    // max-committed scan
     fs.delete(new Path(s"$t/_ptr"), true)
     assert(readMap(VersionedTable.read(spark, t).get) === Map(1L -> "e"))
-
-    // window 5 — a LEGACY _CURRENT pointer (round-13 table, no
-    // markers) naming a committed version resolves through it
-    val ptr = fs.create(new Path(s"$t/_CURRENT"), true)
-    ptr.write("4".getBytes); ptr.close()
-    assert(readMap(VersionedTable.read(spark, t).get) === Map(1L -> "c"),
-      "legacy pointer must still resolve")
   }
 
   test("two concurrent publishers serialize on the version claim: " +
@@ -293,8 +281,7 @@ class VersionedTableSpec extends SparkSuite {
     import graft.streaming.StreamOps
     val t = s"$root/t5"
     val mem = MemoryStream[Up](spark)
-    def start() = StreamOps.upsertSinkVersioned(
-        mem.toDF(), t, Seq("k"), "ver")
+    def start() = StreamOps.upsertSink(mem.toDF(), t, Seq("k"), "ver")
       .option("checkpointLocation", s"$root/t5-ck").start()
     def m(d: org.apache.spark.sql.DataFrame) =
       d.as[Up].collect().map(u => u.k -> ((u.ver, u.v))).toMap
