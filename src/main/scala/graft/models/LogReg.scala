@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Ckpt, CkptMode}
 
@@ -106,9 +107,9 @@ object LogReg {
         case (v, j) => (j, v)
       }).toDF("pos", "w"), path)
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Array[Double] = {
-    val rows = ModelStore.loadTable(spark, path)
-      .orderBy(col("pos")).collect()
-    rows.map(_.getDouble(1))
-  }
+  /** Reads (pos, w) with its known schema and orders it on the driver:
+    * one Spark job, no footer inference, no sort. */
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Array[Double] =
+    ModelStore.loadTable(spark, path, StructType.fromDDL("pos INT, w DOUBLE"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2)
 }

@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A frozen add-one-smoothed bigram language model: the two count
   * tables plus the training vocabulary size. Counts are exact longs,
@@ -56,6 +57,11 @@ object ModelStore {
 
   def loadTable(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** Load a model table whose schema the caller knows: no job to infer
+    * it from the parquet footers. */
+  def loadTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 
   /** Load a BPE merge table (rank, left, right, merged) back into the
     * rank-ordered (left, right) sequence [[graft.operators.BpeEncode]]

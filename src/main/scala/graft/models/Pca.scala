@@ -1,21 +1,30 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
-/** Distributed PCA for embedding compression (SURVEY.md §2-B, round
-  * 12) — project `dim`-d vectors onto their top-`k` principal
-  * components before storage / ANN indexing, the standard
-  * dimensionality-reduction step of an embedding pipeline (smaller
-  * codes, faster distance scans, PQ trains on decorrelated axes).
+/** Distributed PCA for embedding compression (SURVEY.md §2-B) —
+  * project `dim`-d vectors onto their top-`k` principal components
+  * before storage / ANN indexing, the standard dimensionality-reduction
+  * step of an embedding pipeline (smaller codes, faster distance
+  * scans, PQ trains on decorrelated axes).
   *
-  * Split of labor, the kmeans/BPE rule: the DATA-sized work — mean
-  * and second-moment accumulation — is one distributed pass whose
-  * per-(i,j) sums reduce in DECIMAL(38,18) (order-independent, so the
-  * fitted model is bit-identical across partitionings); the
-  * MODEL-sized work — the dim×dim eigendecomposition — runs on the
-  * driver via cyclic Jacobi over the collected 64×64 covariance
-  * (4096 doubles; a collect of hyperparameter size, not corpus size).
+  * Split of labor, the kmeans/BPE rule: the DATA-sized work is ONE
+  * distributed pass; the MODEL-sized work — the dim×dim
+  * eigendecomposition — runs on the driver via cyclic Jacobi over the
+  * collected 64×64 covariance (4096 doubles; a collect of
+  * hyperparameter size, not corpus size). The pass appends a constant
+  * 1.0 slot to every vector and reduces the upper-triangle products of
+  * `x ++ [1.0]` per (i, j) in DECIMAL(38,18) (order-independent, so
+  * the fitted model is bit-identical across partitionings). Column
+  * `dim` of that triangle holds the coordinate sums (`xi * 1.0 == xi`)
+  * and cell `(dim, dim)` the row count, so count, mean and second
+  * moments come from one shuffle. The appended slot only lands at
+  * `dim` when the vector has length `dim`, so the same pass fails the
+  * fit (`raise_error`, naming the expected and found length) on any
+  * other length. Null vectors are dropped before the pass and count
+  * in neither `n` nor the sums.
+  *
   * Fitting reads a deterministic hash sample when `sampleOneIn` > 1
   * (the pqTrain precedent: subspace estimation needs ~10⁴ examples,
   * not the corpus); PROJECTION is one embarrassingly-parallel
@@ -25,7 +34,8 @@ import org.apache.spark.sql.functions._
   * cyclic sweep order from a deterministic matrix, eigenpairs sort by
   * (eigenvalue desc, original index), and each eigenvector's sign is
   * normalized (largest-|coordinate| positive) — PcaSpec asserts the
-  * whole model is bit-stable across partitionings.
+  * whole model is bit-stable across partitionings and bit-equal to
+  * separate count, mean and moment passes.
   */
 object Pca {
 
@@ -45,23 +55,20 @@ object Pca {
       // multiply under ANSI at ids > 2^31), still a pure reproducible
       // row predicate
       else emb.filter(pmod(xxhash64(col(idCol)), lit(sampleOneIn.toLong)) === 0)
-    val rows = sampled.select(col(embCol).cast("array<double>").as("x"))
-    val n = rows.count().toDouble
-    require(n > 1, "PCA needs at least two rows")
-    val meanArr = {
-      val sums = rows
-        .select(posexplode(col("x")).as(Seq("i", "xi")))
-        .select(col("i"), col("xi").cast("decimal(38,18)").as("xi"))
-        .groupBy(col("i")).agg(sum(col("xi")).as("s"))
-        .collect().map(r => r.getInt(0) -> r.getDecimal(1).doubleValue()).toMap
-      Array.tabulate(dim)(i => sums.getOrElse(i, 0.0) / n)
-    }
-    // upper-triangle second moments: two chained generators (one per
-    // select — Spark's one-generator rule), j >= i filter before the
-    // decimal cast so the shuffle carries dim(dim+1)/2 groups
-    val moments = rows
-      .select(posexplode(col("x")).as(Seq("i", "xi")), col("x"))
-      .select(col("i"), col("xi"), posexplode(col("x")).as(Seq("j", "xj")))
+    // one pass: the upper triangle of (x ++ [1.0]) ⊗ (x ++ [1.0]), two
+    // chained generators (one per select — Spark's one-generator
+    // rule), j >= i filter before the decimal cast so the shuffle
+    // carries (dim+1)(dim+2)/2 groups
+    val x = col("x")
+    val moments = sampled
+      .select(col(embCol).cast("array<double>").as("x"))
+      .filter(x.isNotNull)
+      .select(when(size(x) === dim, concat(x, array(lit(1.0))))
+        .otherwise(raise_error(concat(
+          lit(s"PCA expects vectors of length $dim, found length "),
+          size(x).cast("string")))).as("x"))
+      .select(posexplode(x).as(Seq("i", "xi")), x)
+      .select(col("i"), col("xi"), posexplode(x).as(Seq("j", "xj")))
       .filter(col("j") >= col("i"))
       .select(col("i"), col("j"),
         (col("xi") * col("xj")).cast("decimal(38,18)").as("p"))
@@ -69,6 +76,9 @@ object Pca {
       .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDecimal(2).doubleValue())
       .toMap
+    val n = moments.getOrElse((dim, dim), 0.0)
+    require(n > 1, "PCA needs at least two rows")
+    val meanArr = Array.tabulate(dim)(i => moments.getOrElse((i, dim), 0.0) / n)
     val cov = Array.tabulate(dim, dim) { (i, j) =>
       val (a, b) = if (i <= j) (i, j) else (j, i)
       moments.getOrElse((a, b), 0.0) / n - meanArr(i) * meanArr(j)
@@ -81,7 +91,7 @@ object Pca {
     * max sweeps, deterministic early-out on exact off-diagonal norm.
     * Returns (eigenvalues, row-major eigenvectors) sorted by
     * (eigenvalue desc, index) with normalized signs. */
-  private[models] def jacobiEigen(m: Array[Array[Double]],
+  private[graft] def jacobiEigen(m: Array[Array[Double]],
       dim: Int): (Array[Double], Array[Array[Double]]) = {
     val a = Array.tabulate(dim, dim)((i, j) => m(i)(j))
     val v = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
@@ -167,32 +177,16 @@ object Pca {
     }.toIndexedSeq: _*)
   }
 
-  /** Persist / reload via ModelStore tables (mean, eigenvalues,
-    * components) — train once, project forever. */
+  /** Persist / reload as ONE single-row ModelStore table of
+    * (mean, eigenvalues, components) arrays — train once, project
+    * forever. The reload reads with the model's own schema (no footer
+    * inference job) and collects the one row: one job each way. */
   def save(spark: org.apache.spark.sql.SparkSession, model: Model,
-      path: String): Unit = {
-    ModelStore.saveTable(
-      spark.createDataFrame(model.mean.toIndexedSeq.zipWithIndex
-        .map { case (v, i) => (i, v) }).toDF("pos", "m"), s"$path/mean")
-    ModelStore.saveTable(
-      spark.createDataFrame(model.eigenvalues.toIndexedSeq.zipWithIndex
-        .map { case (v, c) => (c, v) }).toDF("comp", "ev"), s"$path/eigenvalues")
-    ModelStore.saveTable(
-      spark.createDataFrame(for {
-        (row, c) <- model.components.toIndexedSeq.zipWithIndex
-        (x, i) <- row.toIndexedSeq.zipWithIndex
-      } yield (c, i, x)).toDF("comp", "pos", "v"), s"$path/components")
-  }
+      path: String): Unit =
+    ModelStore.saveTable(spark.createDataFrame(Seq(model)), path)
 
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val mean = ModelStore.loadTable(spark, s"$path/mean")
-      .orderBy(col("pos")).collect().map(_.getDouble(1))
-    val evs = ModelStore.loadTable(spark, s"$path/eigenvalues")
-      .orderBy(col("comp")).collect().map(_.getDouble(1))
-    val comps = ModelStore.loadTable(spark, s"$path/components")
-      .orderBy(col("comp"), col("pos")).collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getDouble(2)))
-    Model(mean, evs, comps.toArray)
+    val enc = Encoders.product[Model]
+    ModelStore.loadTable(spark, path, enc.schema).as(enc).collect().head
   }
 }

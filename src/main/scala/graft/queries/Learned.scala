@@ -112,16 +112,18 @@ object Learned extends QueryPack {
     }),
 
     // PCA embedding compression: fit mean + top-8 components on a
-    // deterministic hash sample (models.Pca — decimal moment sums +
-    // driver Jacobi on the 64x64 covariance), persist the model, and
-    // project EVERY vector from the RELOADED artifact in one
-    // broadcast-weights pass — the dimensionality-reduction step an
-    // embedding pipeline runs before storage/ANN. Output rolls the
-    // projection up per label (means of the first two PCs) with the
-    // model's explained-variance share riding along. No oracle
-    // (iterative eigensolver); PcaSpec pins orthonormality,
-    // eigen-order, determinism, planted low-rank recovery, and
-    // save/reload parity.
+    // deterministic hash sample (models.Pca — one decimal moment pass
+    // + driver Jacobi on the 64x64 covariance), persist the model as a
+    // one-row artifact, and project EVERY vector from the RELOADED
+    // artifact in one broadcast-weights pass — the dimensionality-
+    // reduction step an embedding pipeline runs before storage/ANN.
+    // The build (fit, save, reload) launches at most 5 Spark jobs.
+    // Output rolls the projection up per label (means of the first two
+    // PCs) with the model's explained-variance share riding along. No
+    // oracle (iterative eigensolver); PcaSpec pins orthonormality,
+    // eigen-order, determinism, parity with separate count/mean/moment
+    // passes, planted low-rank recovery, save/reload parity and the
+    // build's job count.
     "q_embed_pca" -> ((spark, sfDir) => {
       import graft.models.Pca
       val emb = Tables.embeddings(spark, sfDir)

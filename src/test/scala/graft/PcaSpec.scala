@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.models.Pca
@@ -8,8 +9,10 @@ import graft.models.Pca
   * 12). Declared no-oracle (iterative eigensolver), so this suite
   * carries the correctness weight: orthonormal components, descending
   * nonnegative eigenvalues whose total matches the covariance trace,
-  * bit-determinism across partitionings, recovery of a planted
-  * low-rank structure, and persisted-model parity. */
+  * bit-determinism across partitionings, bit-parity with separate
+  * count, mean and moment passes, recovery of a planted low-rank
+  * structure, persisted-model parity, and the Spark job count of the
+  * registry build. */
 class PcaSpec extends SparkSuite {
 
   private val Dim = 64
@@ -54,26 +57,70 @@ class PcaSpec extends SparkSuite {
       "PCA model must not depend on partitioning (decimal moment sums)")
   }
 
-  test("planted low-rank structure is recovered: 3 dominant directions") {
-    import spark.implicits._
-    // x = a*e0 + b*e1 + c*e2 + tiny noise: variance concentrates in a
-    // known 3-d subspace; PCA must put ~all mass in its top 3
-    def u(x: Long): Double = ((mix64(x) & 0x3ff).toDouble / 1024.0) - 0.5
-    val rows = (0 until 800).map { i =>
-      val (a, b, c) = (u(i * 7L + 1) * 3, u(i * 7L + 2) * 2, u(i * 7L + 3))
-      val v = Array.tabulate(Dim) { d =>
-        val signal = d match {
-          case 0 => a
-          case 1 => b
-          case 2 => c
-          case _ => 0.0
-        }
-        (signal + u(i * 131L + d) * 0.01).toFloat
+  private def u(x: Long): Double = ((mix64(x) & 0x3ff).toDouble / 1024.0) - 0.5
+
+  /** Row `i` of the planted set: x = a*e0 + b*e1 + c*e2 + tiny noise,
+    * so variance concentrates in a known 3-d subspace. */
+  private def plantedVec(i: Int): Seq[Float] = {
+    val (a, b, c) = (u(i * 7L + 1) * 3, u(i * 7L + 2) * 2, u(i * 7L + 3))
+    Seq.tabulate(Dim) { d =>
+      val signal = d match {
+        case 0 => a
+        case 1 => b
+        case 2 => c
+        case _ => 0.0
       }
-      (i.toLong, v.toSeq)
+      (signal + u(i * 131L + d) * 0.01).toFloat
     }
-    val df = rows.toDF("vec_id", "embedding")
-    val m = Pca.fit(df, "embedding", Dim, k = 6)
+  }
+
+  /** The planted set with `extra` (vec_id, embedding) rows appended. */
+  private def planted(n: Int,
+      extra: Seq[(Long, Option[Seq[Float]])] = Nil): DataFrame = {
+    import spark.implicits._
+    ((0 until n).map(i => (i.toLong, Option(plantedVec(i)))) ++ extra)
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Every double of the model as raw bits, so equality is bit-equality. */
+  private def bits(m: Pca.Model): (Seq[Long], Seq[Long], Seq[Seq[Long]]) = {
+    def b(a: Array[Double]) = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    (b(m.mean), b(m.eigenvalues), m.components.toSeq.map(b))
+  }
+
+  /** The former three-pass fit — `count`, per-coordinate decimal sums,
+    * then upper-triangle decimal moments — through the same Jacobi:
+    * the reference the one-pass fit must reproduce bit for bit. */
+  private def threePassFit(emb: DataFrame, dim: Int, k: Int): Pca.Model = {
+    val rows = emb.select(col("embedding").cast("array<double>").as("x"))
+    val n = rows.count().toDouble
+    val sums = rows
+      .select(posexplode(col("x")).as(Seq("i", "xi")))
+      .select(col("i"), col("xi").cast("decimal(38,18)").as("xi"))
+      .groupBy(col("i")).agg(sum(col("xi")).as("s"))
+      .collect().map(r => r.getInt(0) -> r.getDecimal(1).doubleValue()).toMap
+    val mean = Array.tabulate(dim)(i => sums.getOrElse(i, 0.0) / n)
+    val moments = rows
+      .select(posexplode(col("x")).as(Seq("i", "xi")), col("x"))
+      .select(col("i"), col("xi"), posexplode(col("x")).as(Seq("j", "xj")))
+      .filter(col("j") >= col("i"))
+      .select(col("i"), col("j"),
+        (col("xi") * col("xj")).cast("decimal(38,18)").as("p"))
+      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("s"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getDecimal(2).doubleValue())
+      .toMap
+    val cov = Array.tabulate(dim, dim) { (i, j) =>
+      val (a, b) = if (i <= j) (i, j) else (j, i)
+      moments.getOrElse((a, b), 0.0) / n - mean(i) * mean(j)
+    }
+    val (evals, evecs) = Pca.jacobiEigen(cov, dim)
+    Pca.Model(mean, evals.take(k), evecs.take(k))
+  }
+
+  test("planted low-rank structure is recovered: 3 dominant directions") {
+    // PCA must put ~all mass in the planted top 3
+    val m = Pca.fit(planted(800), "embedding", Dim, k = 6)
     val top3 = m.eigenvalues.take(3).sum
     val rest = m.eigenvalues.drop(3).sum
     assert(top3 > 50 * rest,
@@ -103,6 +150,48 @@ class PcaSpec extends SparkSuite {
       .collect().map(_.getSeq[Double](0))
     assert(a.zip(b).forall { case (x, y) => x == y },
       "persisted model projects differently")
+  }
+
+  test("the one-pass fit is bit-equal to separate count, mean and " +
+      "moment passes") {
+    val emb = Tables.embeddings(spark, Sf)
+    assert(bits(Pca.fit(emb, "embedding", Dim, k = 8)) ===
+      bits(threePassFit(emb, Dim, k = 8)), "fixture embeddings")
+    val low = planted(800)
+    assert(bits(Pca.fit(low, "embedding", Dim, k = 6)) ===
+      bits(threePassFit(low, Dim, k = 6)), "planted low-rank set")
+  }
+
+  test("a null vector counts in neither n nor the sums") {
+    val without = Pca.fit(planted(200), "embedding", Dim, k = 4)
+    val withNull = Pca.fit(planted(200, Seq(10000L -> None)),
+      "embedding", Dim, k = 4)
+    assert(bits(withNull) === bits(without),
+      "a null vector changed the fitted model")
+  }
+
+  test("a vector of the wrong length fails the fit with both lengths") {
+    val short = Seq(10000L -> Option(plantedVec(0).take(Dim - 1)))
+    val e = intercept[Exception](
+      Pca.fit(planted(200, short), "embedding", Dim, k = 4))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    val want = s"PCA expects vectors of length $Dim, found length ${Dim - 1}"
+    assert(msgs.exists(_.contains(want)), s"no '$want' in: ${e.getMessage}")
+  }
+
+  test("job counts: fit <= 2, load <= 1, the q_embed_pca build <= 5") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-jobs") + "/model"
+    val emb = Tables.embeddings(spark, Sf)
+    val (m, fitJobs, _) = sparkWork(Pca.fit(emb, "embedding", Dim, k = 8))
+    Pca.save(spark, m, dir)
+    val (_, loadJobs, _) = sparkWork(Pca.load(spark, dir))
+    // the registry function before its action: fit, save, reload
+    val (_, buildJobs, _) =
+      sparkWork(SparkEntry.queries("q_embed_pca")(spark, Sf))
+    assert(fitJobs <= 2, s"Pca.fit ran $fitJobs jobs")
+    assert(loadJobs <= 1, s"Pca.load ran $loadJobs jobs")
+    assert(buildJobs <= 5, s"the q_embed_pca build ran $buildJobs jobs")
   }
 
   test("registry row: per-label rollup with positive top-k variance") {

@@ -4,8 +4,6 @@ import java.io.{File, FileOutputStream, OutputStreamWriter, PrintWriter}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.graftbus.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -215,39 +213,6 @@ class PipelineSpec extends SparkSuite {
     assert(spark.read.parquet(target).count() == 6,
       "partially-committed job duplicated rows on retry")
     assert(real.findPreviousJobId("custom", "app-d").contains(301L))
-  }
-
-  private val WorkTag = "graft.test.work"
-
-  /** Runs `f` and counts the Spark jobs it launches from this thread,
-    * and the input records their tasks read. Jobs are matched by a
-    * local property, so work other threads launch is not counted. */
-  private def sparkWork[T](f: => T): (T, Int, Long) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(WorkTag) == tag)) {
-          jobs.incrementAndGet()
-          j.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (stages.contains(t.stageId) && t.taskMetrics != null)
-          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(WorkTag, tag)
-    try {
-      val r = f
-      ListenerBusDrain(sc)
-      (r, jobs.get, records.get)
-    } finally {
-      sc.setLocalProperty(WorkTag, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def dataFilesUnder(dir: File): Seq[File] =
