@@ -252,36 +252,7 @@ object ScaleBench {
     val json = rows.map { case (q, t1, r1, tk, rk, ratio) =>
       f"""\"$q\":{\"t1\":$t1%.3f,\"t$k\":$tk%.3f,\"ratio\":$ratio%.3f,\"per_row\":${ratio / k}%.3f,\"refused_1\":$r1,\"refused_$k\":$rk}"""
     }.mkString("{", ",", "}")
-    // Round 20 (VERDICT r19 next #4): string-key vs xxhash64-key A/B
-    // for the substring window aggregations — repeatedWindows shuffles
-    // the ~50-byte window STRING in the registry form (so the DuckDB
-    // oracle runs the identical plan) and an 8-byte hash behind the
-    // hashKeys flag (parity proven by HashedGramKeySpec). This section
-    // prices the swap at volume; gate it through the same ONLY filter.
-    val hashAb =
-      if (!only.forall(_.contains("substring_hashkeys_ab"))) ""
-      else {
-        def runWin(dir: String, hashKeys: Boolean): Double = {
-          val t0 = System.nanoTime()
-          graft.queries.TextOps.repeatedWindows(
-              graft.Tables.documents(spark, dir), 8, hashKeys = hashKeys)
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        runWin(oneDir, hashKeys = false) // warm
-        val s1 = runWin(oneDir, hashKeys = false)
-        val sk = runWin(kDir, hashKeys = false)
-        runWin(oneDir, hashKeys = true) // warm the hashed shape too
-        val h1 = runWin(oneDir, hashKeys = true)
-        val hk = runWin(kDir, hashKeys = true)
-        println(f"[scale] substring_hashkeys_ab string: t1=$s1%6.2fs " +
-          f"t$k=$sk%6.2fs | hashed: t1=$h1%6.2fs t$k=$hk%6.2fs " +
-          f"(kx speedup x${sk / hk}%4.2f)")
-        f""","substring_hashkeys_ab":{"string_t1":$s1%.3f,""" +
-          f""""string_t$k":$sk%.3f,"hashed_t1":$h1%.3f,""" +
-          f""""hashed_t$k":$hk%.3f,"kx_speedup":${sk / hk}%.3f}"""
-      }
-    val doc = s"""{"base":"$baseDir","k":$k,"queries":$json$hashAb}"""
+    val doc = s"""{"base":"$baseDir","k":$k,"queries":$json}"""
     Files.createDirectories(Paths.get("target"))
     Files.write(Paths.get("target/scalecurve.json"),
       doc.getBytes(StandardCharsets.UTF_8))
@@ -401,38 +372,6 @@ object SkewBench {
     "q_text_dupgrams",
     "q_text_winnow")
 
-  private class TaskStatsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val maxMs = new java.util.concurrent.atomic.AtomicLong
-    val maxRec = new java.util.concurrent.atomic.AtomicLong
-    val nEnded = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      if (t.taskInfo != null)
-        maxMs.getAndAccumulate(t.taskInfo.duration, math.max): Unit
-      if (t.taskMetrics != null)
-        maxRec.getAndAccumulate(
-          t.taskMetrics.shuffleWriteMetrics.recordsWritten, math.max): Unit
-      nEnded.incrementAndGet(): Unit
-    }
-
-    /** Task-end events post on the async listener bus — a fixed sleep
-      * can read the counters while events are still arriving on a
-      * loaded box, silently under-reporting the exact metrics the skew
-      * bar judges (round 17, ADVICE r16 low). Poll until the event
-      * count is STABLE across two consecutive checks (bounded at 10 s;
-      * the action has already returned, so only queued events remain). */
-    def drain(): Unit = {
-      var prev = -1L
-      var waited = 0L
-      while (nEnded.get != prev && waited < 10000L) {
-        prev = nEnded.get
-        Thread.sleep(250)
-        waited += 250
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
@@ -452,26 +391,28 @@ object SkewBench {
       skewify(spark, s"target/scale/x$k", sk)
     }
 
+    /** Wall seconds, max task ms and max per-task shuffle-write
+      * records of one noop-sink run of `df` (noop sink, not count() —
+      * see ScaleBench.run's rationale). */
+    def runDf(df: => org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
+      val (sec, w) = SparkWork.measure(spark) {
+        val t0 = System.nanoTime()
+        df.write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      (sec, w.maxTaskMs, w.maxTaskShuffleRecords)
+    }
+
     // A refusal (BandGuard exact-member cap) is a DESIGNED outcome on
     // a skewed corpus — the hot-source transform concentrates 20% of
     // the k× docs in one block, which is exactly what the guard
     // exists to refuse (round 20: q_dedup_jaccard's source blocks are
     // now capped). The harness records it, never crashes on it.
-    def run(name: String, dir: String): Option[(Double, Long, Long)] = {
-      val l = new TaskStatsListener
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val t0 = System.nanoTime()
-        // noop sink, not count() — see ScaleBench.run's rationale
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        l.drain() // poll until the async bus goes quiet (see drain)
-        Some((sec, l.maxMs.get, l.maxRec.get))
-      } catch {
+    def run(name: String, dir: String): Option[(Double, Long, Long)] =
+      try Some(runDf(SparkEntry.queries(name)(spark, dir)))
+      catch {
         case t: Throwable if graft.operators.BandGuard.isRefusal(t) => None
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+      }
 
     def measure(q: String, d1: String, dk: String): String = {
       run(q, d1) // discard: JIT + scan cache warm
@@ -517,17 +458,6 @@ object SkewBench {
     // so the guard ACTIVATES between 1× and k× — the reading that
     // matters (r17's editdist lesson: under-cap data can't expose an
     // enumeration asymptote).
-    def runDf(df: => org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
-      val l = new TaskStatsListener
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        l.drain()
-        (sec, l.maxMs.get, l.maxRec.get)
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     def measureDf(label: String,
         mk: Boolean => org.apache.spark.sql.DataFrame): String = {
       runDf(mk(false)) // discard: JIT warm

@@ -1,15 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-
 /** Plan-shape diagnostic: run one registry query and print its
   * scheduler cost — jobs, stages, tasks, wall seconds — as one JSON
-  * line. The instrument behind stage-count A/Bs (e.g. the round-16
-  * pointer-jump stride change: wall seconds on a drifting box cannot
-  * distinguish a 20% win from noise, but the stage count is exact and
-  * box-independent).
+  * line. Wall seconds on a drifting box cannot tell a 20% win from
+  * noise, but the stage count is exact and box-independent. The
+  * counts come from [[SparkWork]].
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_ONLY=<query> [reps]
   * java ... graft.StageCount
@@ -22,61 +17,19 @@ object StageCount {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val tasks = new AtomicInteger
-    val maxMs = new java.util.concurrent.atomic.AtomicLong
-    val maxRec = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet(): Unit
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet(): Unit
-        if (t.taskInfo != null)
-          maxMs.getAndAccumulate(t.taskInfo.duration, math.max): Unit
-        if (t.taskMetrics != null)
-          maxRec.getAndAccumulate(
-            t.taskMetrics.shuffleWriteMetrics.recordsWritten, math.max): Unit
-        if (sys.env.contains("SPARK_GRAFT_DEBUG_TASKS") &&
-            t.taskInfo != null && t.taskMetrics != null)
-          System.err.println(s"[task] stage=${t.stageId} " +
-            s"ms=${t.taskInfo.duration} " +
-            s"shufWrite=${t.taskMetrics.shuffleWriteMetrics.recordsWritten} " +
-            s"shufRead=${t.taskMetrics.shuffleReadMetrics.recordsRead} " +
-            s"input=${t.taskMetrics.inputMetrics.recordsRead}")
-      }
-    })
-    // one discarded warmup, then `reps` measured runs (counters reset
-    // per run; listener events drain asynchronously, so wait for the
-    // listener bus between runs)
     // the noop sink, NOT count(): count() lets Catalyst prune final
     // sorts and gut global-aggregate plans (see ScaleBench.run)
-    def exec(): Unit =
+    def exec(): Double = {
+      val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-    // events post on the async listener bus: a fixed sleep can read
-    // the counters mid-drain on a loaded box (ADVICE r16 low) — poll
-    // until the task counter is stable across two consecutive checks
-    def drain(): Unit = {
-      var prev = -1
-      var waited = 0
-      while (tasks.get != prev && waited < 10000) {
-        prev = tasks.get
-        Thread.sleep(250)
-        waited += 250
-      }
+      (System.nanoTime() - t0) / 1e9
     }
+    // one discarded warmup, then `reps` measured runs
     exec()
     val out = (1 to reps).map { _ =>
-      drain()
-      jobs.set(0); stages.set(0); tasks.set(0); maxMs.set(0); maxRec.set(0)
-      val t0 = System.nanoTime()
-      exec()
-      val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      f"""{"jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"max_task_ms":${maxMs.get},"max_shuffle_rec":${maxRec.get},"sec":$sec%.3f}"""
+      val (sec, w) = SparkWork.measure(spark)(exec())
+      f"""{"jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"max_task_ms":${w.maxTaskMs},"max_shuffle_rec":${w.maxTaskShuffleRecords},"sec":$sec%.3f}"""
     }
     println(s"""{"query":"$name","sf":"$sfDir","runs":[${out.mkString(",")}]}""")
     spark.stop()

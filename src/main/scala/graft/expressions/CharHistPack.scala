@@ -8,11 +8,57 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Kernels for the PRECOMPUTED character-histogram prune (round 14).
+/** Reference kernel for the character-histogram prune: the exact
+  * (unsaturated) L1 distance between two strings' histograms,
+  * computed from the strings. PropertySpec checks the packed kernels
+  * below against it.
+  */
+object CharHist {
+  /** L1 distance between the two strings' character histograms,
+    * binned by UTF-8 LEADING byte (continuation bytes 10xxxxxx are
+    * skipped), so every code point lands in exactly one bin for any
+    * UTF-8 input. */
+  def l1(a: UTF8String, b: UTF8String): Int = {
+    val h = new Array[Int](256)
+    val na = a.numBytes
+    var i = 0
+    while (i < na) {
+      val x = a.getByte(i) & 0xff
+      if ((x & 0xc0) != 0x80) h(x) += 1
+      i += 1
+    }
+    val nb = b.numBytes
+    i = 0
+    while (i < nb) {
+      val x = b.getByte(i) & 0xff
+      if ((x & 0xc0) != 0x80) h(x) -= 1
+      i += 1
+    }
+    var s = 0
+    i = 0
+    while (i < 256) {
+      val v = h(i)
+      s += (if (v < 0) -v else v)
+      i += 1
+    }
+    s
+  }
+}
+
+/** Kernels for the PRECOMPUTED character-histogram prune.
   *
-  * [[CharHistL1]] recomputes both strings' histograms PER PAIR —
-  * O(|a|+|b|) inside the join condition, which multiplies by the
-  * blocked join's candidate-pair count: the k=30 scaling run measured
+  * The L1 distance between two strings' character histograms is a
+  * cheap LOWER BOUND on twice their edit distance: one substitution
+  * moves one code point between two bins (L1 contribution ≤ 2), one
+  * insert/delete touches one bin (contribution 1), so
+  * `l1(a,b) ≤ 2·levenshtein(a,b)` for ANY UTF-8 input (leading-byte
+  * binning gives each code point exactly one bin; bin collisions only
+  * shrink the L1, keeping the bound valid). Filtering candidate pairs
+  * at `l1 ≤ 2·maxDist` is therefore lossless.
+  *
+  * Computing both histograms PER PAIR costs O(|a|+|b|) inside the
+  * join condition, which multiplies by the blocked join's
+  * candidate-pair count: the k=30 scaling run measured
   * q_dedup_editdist_e2e SUPERLINEAR (37.7× cost at 30× rows) with the
   * per-pair string walks as the dominant term (bin populations sit
   * below the BandGuard cap, so pairs grow quadratically within bins

@@ -64,10 +64,12 @@ object Concur {
   /** Spark's driver-side local properties worth carrying from the
     * caller into each overlapped chain (see class scaladoc). Constants
     * mirror SparkContext's public setJobGroup/setJobDescription/
-    * scheduler-pool keys. */
+    * scheduler-pool keys; the last is [[graft.SparkWork]]'s tag, so a
+    * chain's jobs count toward the caller that measures them. */
   private val PropKeys = Seq(
     "spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.scheduler.pool")
+    "spark.job.interruptOnCancel", "spark.scheduler.pool",
+    graft.SparkWork.TagKey)
 
   /** Wrap a thunk so it runs under the CALLER's Spark local properties
     * (captured now, on the calling thread) and clears them after — a

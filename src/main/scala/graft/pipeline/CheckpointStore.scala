@@ -110,11 +110,10 @@ final class ParquetCheckpointStore(spark: SparkSession, path: String)
   * JDBC prepared statements, matching the reference's Postgres table
   * one-for-one (DDL mirror of the reference's Unity_to_BigQuery.py:36-42;
   * [[findPreviousJobId]] is the reference's WHERE + ORDER BY, run by
-  * the database). The session parameter is unused and kept for the
-  * constructor's callers. A prod deployment only changes the URL and
-  * driver class.
+  * the database). A prod deployment only changes the URL and driver
+  * class.
   */
-final class JdbcCheckpointStore(spark: SparkSession, url: String,
+final class JdbcCheckpointStore(url: String,
     table: String = "ua_completed_reports",
     driver: String = "org.apache.derby.jdbc.EmbeddedDriver")
     extends CheckpointStore {

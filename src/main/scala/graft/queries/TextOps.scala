@@ -504,9 +504,9 @@ object TextOps extends QueryPack {
       overCapStar: Boolean = true): DataFrame = {
     val binWidth = editDistBinWidth(maxDist)
     // The histogram is computed ONCE per row here (O(len), row scale)
-    // and compared packed per pair (O(256), length-independent) — the
-    // per-pair CharHistL1 string walk was the superlinear term the
-    // round-14 k=30 scaling run caught (37.7× cost at 30× rows:
+    // and compared packed per pair (O(256), length-independent) — a
+    // per-pair string walk was the superlinear term the round-14 k=30
+    // scaling run caught (37.7× cost at 30× rows:
     // within-cap bin populations grow linearly, pairs quadratically,
     // and each pair re-walked the full text).
     val base = docs.select(col("doc_id"), col("text"),
@@ -523,12 +523,11 @@ object TextOps extends QueryPack {
     // ~10 s at sf0.1, flat no matter what the prunes rejected).
     // Conjunct order is preserved and And short-circuits in codegen,
     // so here the DP touches only pairs that survive id/length/L1 —
-    // the char-histogram L1 ≤ 2·dist bound (see CharHistPack; same
-    // bound as CharHistL1, but over the per-ROW precomputed packed
-    // histograms, so a rejected pair costs O(256) instead of a full
-    // re-walk of both texts) rejects nearly every non-dup pair of a
-    // same-domain corpus. The output projection re-evaluates
-    // levenshtein only on final survivors.
+    // the char-histogram L1 ≤ 2·dist bound (see CharHistPack; over
+    // the per-ROW precomputed packed histograms, so a rejected pair
+    // costs O(256) instead of a full re-walk of both texts) rejects
+    // nearly every non-dup pair of a same-domain corpus. The output
+    // projection re-evaluates levenshtein only on final survivors.
     def pairJoin(l: DataFrame, r: DataFrame): DataFrame =
       l.join(r, col("ea.k") === col("eb.bin") &&
         col("ea.doc_id") < col("eb.doc_id") &&

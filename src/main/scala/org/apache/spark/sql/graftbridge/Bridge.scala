@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -7,12 +8,19 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge to the `private[sql]` Column↔Expression converters —
   * the sanctioned pattern for third-party Catalyst expressions (the
-  * public API intentionally hides Expression since the Connect split).
-  * Everything else in this library uses public APIs only.
+  * public API intentionally hides Expression since the Connect split) —
+  * and to the few `private[spark]` calls below. Everything else in this
+  * library uses public APIs only.
   */
 object Bridge extends Logging {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until every event already posted to the listener bus has
+    * been delivered to every listener. Listener events are delivered
+    * asynchronously, so counts read right after an action returns can
+    * miss its last task-end events; after this call they cannot. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Release the block-manager storage behind a `localCheckpoint()`ed
     * Dataset. Iterative operators (PageRank, connected components,

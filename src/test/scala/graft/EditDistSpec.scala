@@ -41,8 +41,9 @@ class EditDistSpec extends SparkSuite {
       ("flaw", "lawn"), ("straße", "strasse"), ("héllo wörld", "hello world"),
       ("日本語テキスト", "日本語のテキスト"), ("aaaa", "bbbb"),
       ("the quick brown fox", "the quiet brown fax"))
+    import graft.expressions.CharHistPack.{pack, packedL1}
     val rows = samples.toDF("a", "b")
-      .select(graft.expressions.CharHistL1.charL1(col("a"), col("b")).as("l1"),
+      .select(packedL1(pack(col("a")), pack(col("b"))).as("l1"),
         levenshtein(col("a"), col("b")).as("lev"))
       .collect()
     rows.foreach { r =>

@@ -2,15 +2,15 @@ package graft
 
 import graft.queries.{Curation, TextOps}
 
-/** Production-form hashed-gram shuffle keys (round-13, VERDICT r12
-  * item 3): at 100 TB the gram-counting shuffles must carry 8-byte
-  * xxhash64(window) keys, not ~50-byte window strings. The string
-  * form stays the REGISTERED query (byte-exact DuckDB oracle parity);
-  * this spec proves the hashed form computes the identical ANSWER on
-  * the real fixture corpus — i.e. the swap is a shuffle-width
-  * optimization, not a semantics change (collision-free at fixture
-  * scale, and at any scale a collision perturbs one ratio by ~2⁻⁶⁴
-  * per distinct-gram pair).
+/** Hashed-gram shuffle keys: at 100 TB the gram-counting shuffles
+  * must carry 8-byte xxhash64(window) keys, not ~50-byte window
+  * strings. Every registered caller passes `hashKeys = true`; the
+  * string form is the reference this spec compares against. It proves
+  * the hashed form computes the identical ANSWER on the real fixture
+  * corpus — i.e. the swap is a shuffle-width optimization, not a
+  * semantics change (collision-free at fixture scale, and at any
+  * scale a collision perturbs one ratio by ~2⁻⁶⁴ per distinct-gram
+  * pair).
   */
 class HashedGramKeySpec extends SparkSuite {
 

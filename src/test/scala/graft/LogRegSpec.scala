@@ -68,11 +68,11 @@ class LogRegSpec extends SparkSuite {
     val w = LogReg.train(data, "features", "label",
       iters = 5, lr = 2.0, dim = Learned.Dim)
     LogReg.save(spark, w, dir)
-    val (back, jobs, _) = sparkWork(LogReg.load(spark, dir))
+    val (back, work) = SparkWork.measure(spark)(LogReg.load(spark, dir))
     assert(back.toSeq == w.toSeq,
       "weights must round-trip parquet bit-exactly")
     // known schema, driver-side order: no footer-inference or sort job
-    assert(jobs <= 1, s"LogReg.load ran $jobs jobs")
+    assert(work.jobs <= 1, s"LogReg.load ran ${work.jobs} jobs")
   }
 
   test("registry rows: per-class rollup separates, holdout serves " +

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.pipeline.{NotifyingListener, RecordingNotifier}
 
@@ -18,16 +19,19 @@ class NotifyingListenerSpec extends SparkSuite {
       intercept[Exception] {
         spark.range(10).select(boom(col("id"))).collect()
       }
-      // listener bus is async — poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (notifier.messages.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      // A failed job's end event is posted just AFTER its caller is
+      // woken, but before the scheduler takes the next job, and a
+      // successful job posts all its events before its caller wakes.
+      // So one more job, then a drain of the async bus, makes the
+      // failure's delivery certain.
+      spark.range(1).count()
+      Bridge.drainListenerBus(spark.sparkContext)
       assert(notifier.messages.nonEmpty, "failure never reached the notifier")
       assert(notifier.messages.forall(_._1 == "engine-errors"))
 
       val before = notifier.messages.size
       assert(spark.range(10).count() == 10)
-      Thread.sleep(200)
+      Bridge.drainListenerBus(spark.sparkContext)
       assert(notifier.messages.size == before, "success must not notify")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -183,15 +183,15 @@ class PcaSpec extends SparkSuite {
   test("job counts: fit <= 2, load <= 1, the q_embed_pca build <= 5") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pca-jobs") + "/model"
     val emb = Tables.embeddings(spark, Sf)
-    val (m, fitJobs, _) = sparkWork(Pca.fit(emb, "embedding", Dim, k = 8))
+    val (m, fit) = SparkWork.measure(spark)(Pca.fit(emb, "embedding", Dim, k = 8))
     Pca.save(spark, m, dir)
-    val (_, loadJobs, _) = sparkWork(Pca.load(spark, dir))
+    val (_, load) = SparkWork.measure(spark)(Pca.load(spark, dir))
     // the registry function before its action: fit, save, reload
-    val (_, buildJobs, _) =
-      sparkWork(SparkEntry.queries("q_embed_pca")(spark, Sf))
-    assert(fitJobs <= 2, s"Pca.fit ran $fitJobs jobs")
-    assert(loadJobs <= 1, s"Pca.load ran $loadJobs jobs")
-    assert(buildJobs <= 5, s"the q_embed_pca build ran $buildJobs jobs")
+    val (_, build) =
+      SparkWork.measure(spark)(SparkEntry.queries("q_embed_pca")(spark, Sf))
+    assert(fit.jobs <= 2, s"Pca.fit ran ${fit.jobs} jobs")
+    assert(load.jobs <= 1, s"Pca.load ran ${load.jobs} jobs")
+    assert(build.jobs <= 5, s"the q_embed_pca build ran ${build.jobs} jobs")
   }
 
   test("registry row: per-label rollup with positive top-k variance") {

@@ -150,7 +150,7 @@ class PipelineSpec extends SparkSuite {
 
   test("JDBC (Derby) checkpoint store: roundtrip + incremental continuation") {
     val url = s"jdbc:derby:$root/ckpt_db;create=true"
-    val store = new JdbcCheckpointStore(spark, url)
+    val store = new JdbcCheckpointStore(url)
     assert(store.findPreviousJobId("custom", "app-j").isEmpty)
     store.append(CheckpointEntry(11L, "custom",
       java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "app-j", None, None))
@@ -162,7 +162,7 @@ class PipelineSpec extends SparkSuite {
     assert(store.findPreviousJobId("transaction", "app-j").contains(99L))
     assert(store.findPreviousJobId("custom", "other-app").isEmpty)
     // re-opening the same database sees the committed rows
-    assert(new JdbcCheckpointStore(spark, url)
+    assert(new JdbcCheckpointStore(url)
       .findPreviousJobId("custom", "app-j").contains(12L))
 
     // the full ingest flow works unchanged over the JDBC store
@@ -230,37 +230,42 @@ class PipelineSpec extends SparkSuite {
     writeJob("app-e", "custom", 501, rows = 9, gzip = true)
     writeJob("app-e", "custom", 502, rows = 6, gzip = false)
     writeJob("app-e", "transaction", 503, rows = 5, gzip = true)
-    val (res, _, records) = sparkWork(IngestJob(spark, cfg,
+    val (res, work) = SparkWork.measure(spark)(IngestJob(spark, cfg,
       new ParquetCheckpointStore(spark, cfg.checkpointPath),
       new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier).runAll())
     assert(res == Map(("app-e", "custom") -> 15L, ("app-e", "transaction") -> 5L))
-    assert(records == 20L, s"read $records input records for 20 committed rows")
+    assert(work.inputRecords == 20L,
+      s"read ${work.inputRecords} input records for 20 committed rows")
   }
 
   test("a lookup over an unchanged checkpoint listing launches no Spark job") {
     val path = s"$root/checkpoints6"
     val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    def jobsOf[T](f: => T): (T, Int) = {
+      val (r, work) = SparkWork.measure(spark)(f)
+      (r, work.jobs)
+    }
     val writer = new ParquetCheckpointStore(spark, path)
     writer.append(CheckpointEntry(1L, "custom", ts, "app-f", None, None))
     writer.append(CheckpointEntry(2L, "custom", ts, "app-g", None, None))
     // the store's own appends keep its index current
-    val (own, ownJobs, _) = sparkWork(writer.findPreviousJobId("custom", "app-f"))
+    val (own, ownJobs) = jobsOf(writer.findPreviousJobId("custom", "app-f"))
     assert(own.contains(1L) && ownJobs == 0, s"own-append lookup ran $ownJobs jobs")
 
     // a new instance reloads once (one scan), then answers from memory
     val reader = new ParquetCheckpointStore(spark, path)
-    val (first, firstJobs, _) = sparkWork(reader.findPreviousJobId("custom", "app-g"))
+    val (first, firstJobs) = jobsOf(reader.findPreviousJobId("custom", "app-g"))
     assert(first.contains(2L) && firstJobs == 1, s"reload ran $firstJobs jobs")
-    val (again, againJobs, _) = sparkWork(reader.findPreviousJobId("custom", "app-f"))
+    val (again, againJobs) = jobsOf(reader.findPreviousJobId("custom", "app-f"))
     assert(again.contains(1L) && againJobs == 0, s"unchanged lookup ran $againJobs jobs")
-    val (none, noneJobs, _) = sparkWork(
+    val (none, noneJobs) = jobsOf(
       new ParquetCheckpointStore(spark, s"$root/no-such-checkpoint").findPreviousJobId("custom", "app-f"))
     assert(none.isEmpty && noneJobs == 0)
 
     // the JDBC store's lookup is a prepared statement, not a Spark job
-    val jdbc = new JdbcCheckpointStore(spark, s"jdbc:derby:$root/ckpt_db6;create=true")
+    val jdbc = new JdbcCheckpointStore(s"jdbc:derby:$root/ckpt_db6;create=true")
     jdbc.append(CheckpointEntry(3L, "custom", ts, "app-f", None, None))
-    val (viaJdbc, jdbcJobs, _) = sparkWork(jdbc.findPreviousJobId("custom", "app-f"))
+    val (viaJdbc, jdbcJobs) = jobsOf(jdbc.findPreviousJobId("custom", "app-f"))
     assert(viaJdbc.contains(3L) && jdbcJobs == 0, s"JDBC lookup ran $jdbcJobs jobs")
   }
 

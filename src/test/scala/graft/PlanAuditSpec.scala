@@ -146,25 +146,13 @@ class PlanAuditSpec extends SparkSuite {
     // subquery); guard the regression. Iterative operators (components,
     // e2e dedup, k-means/PQ training) legitimately run jobs while
     // building and are not checked here.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    @volatile var jobs = List.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // one tiny footer-read job per spark.read.parquet call is scan
-        // SETUP (schema inference), not query execution — allowed
-        val names = js.stageInfos.map(_.name)
-        if (!names.forall(_.startsWith("parquet at ")))
-          jobs ::= s"job ${js.jobId}: ${names.mkString("; ")}"
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, work) = SparkWork.measure(spark) {
       Seq("q_text_drift", "q_decontaminate_bloom", "q_text_tfidf")
         .foreach(q => SparkEntry.queries(q)(spark, Sf))
-      // any construction-time action is BLOCKING, so its start event is
-      // already posted; give the async listener bus a moment to drain
-      Thread.sleep(1500)
-      assert(jobs.isEmpty, s"construction launched jobs: $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // one tiny footer-read job per spark.read.parquet call is scan
+    // SETUP (schema inference), not query execution — allowed
+    val jobs = work.jobStageNames.filterNot(_.forall(_.startsWith("parquet at ")))
+    assert(jobs.isEmpty, s"construction launched jobs: ${jobs.map(_.mkString("; "))}")
   }
 }

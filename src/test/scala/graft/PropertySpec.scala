@@ -162,7 +162,7 @@ class PropertySpec extends SparkSuite {
     d(as.length)(bs.length)
   }
 
-  /** CharHistL1's pruning bound (q_dedup_editdist): the leading-byte
+  /** The char-histogram pruning bound (q_dedup_editdist): the leading-byte
     * char-histogram L1 never exceeds 2x the true edit distance, for
     * arbitrary strings including multibyte — filtering candidate
     * pairs at l1 <= 2*maxDist is therefore lossless. */

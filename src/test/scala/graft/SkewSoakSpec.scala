@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.queries.TextOps
@@ -11,7 +10,7 @@ import graft.queries.TextOps
   * source is ~100× the others AND carries a viral duplicate cluster —
   * the skew shape that kills real 100 TB dedup runs. Assertions:
   *
-  *  (a) task-level, via SparkListener task metrics: in the guarded run
+  *  (a) task-level, via [[SparkWork]] task metrics: in the guarded run
   *      no task's shuffle output is more than a LINEAR function of the
   *      viral cluster (the straggler task that owns the viral
   *      (band, hash) bucket must emit the hub star, not |bucket|²
@@ -22,20 +21,6 @@ import graft.queries.TextOps
   *      cap changes work, never answers).
   */
 class SkewSoakSpec extends SparkSuite {
-
-  /** Per-task shuffle records written, grouped by stage. */
-  private class TaskShuffleListener extends SparkListener {
-    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        written.add(t.stageId -> t.taskMetrics.shuffleWriteMetrics.recordsWritten): Unit
-    def maxPerTask: Long = {
-      val it = written.iterator()
-      var m = 0L
-      while (it.hasNext) m = math.max(m, it.next()._2)
-      m
-    }
-  }
 
   private val ViralN = 200  // viral cluster size (identical docs)
   private val FillN = 600   // distinct filler docs in the big source
@@ -56,16 +41,14 @@ class SkewSoakSpec extends SparkSuite {
     (viral ++ fill ++ smalls).toDF("doc_id", "text", "source", "lang")
   }
 
-  private def survivorsWith(docs: org.apache.spark.sql.DataFrame, cap: Int,
-      listener: Option[TaskShuffleListener]): Set[Long] = {
-    listener.foreach(spark.sparkContext.addSparkListener)
-    try {
-      val ids = TextOps.minhashDedupSurvivors(docs, 0.8, bucketCap = cap)
+  /** Survivors, and the most shuffle records one task wrote. */
+  private def survivorsWith(docs: org.apache.spark.sql.DataFrame,
+      cap: Int): (Set[Long], Long) = {
+    val (ids, work) = SparkWork.measure(spark) {
+      TextOps.minhashDedupSurvivors(docs, 0.8, bucketCap = cap)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      // task-end events post async; drain before reading the metrics
-      listener.foreach(_ => Thread.sleep(1500))
-      ids
-    } finally listener.foreach(spark.sparkContext.removeSparkListener)
+    }
+    (ids, work.maxTaskShuffleRecords)
   }
 
   test("100x-skewed source with a viral dup cluster: guarded straggler " +
@@ -73,10 +56,8 @@ class SkewSoakSpec extends SparkSuite {
     val docs = corpus().localCheckpoint() // freeze: both runs read one copy
     val cap = 8
 
-    val guardedL = new TaskShuffleListener
-    val guarded = survivorsWith(docs, cap, Some(guardedL))
-    val unguardedL = new TaskShuffleListener
-    val unguarded = survivorsWith(docs, Int.MaxValue, Some(unguardedL))
+    val (guarded, guardedMax) = survivorsWith(docs, cap)
+    val (unguarded, unguardedMax) = survivorsWith(docs, Int.MaxValue)
 
     // (b) answers identical: the cap must never change WHO survives
     assert(guarded == unguarded,
@@ -95,11 +76,11 @@ class SkewSoakSpec extends SparkSuite {
     // cluster: 8 bands × (ViralN − 1) pairs plus banded-row traffic.
     val quadratic = ViralN.toLong * (ViralN - 1) / 2
     val linearBound = 8L * ViralN + 4096 // star pairs + row-stream slack
-    assert(unguardedL.maxPerTask >= quadratic,
-      s"soak lost its teeth: unguarded worst task wrote ${unguardedL.maxPerTask} " +
+    assert(unguardedMax >= quadratic,
+      s"soak lost its teeth: unguarded worst task wrote $unguardedMax " +
         s"< expected quadratic $quadratic — corpus no longer degenerate?")
-    assert(guardedL.maxPerTask <= linearBound,
-      s"guarded straggler not bounded: worst task wrote ${guardedL.maxPerTask} " +
+    assert(guardedMax <= linearBound,
+      s"guarded straggler not bounded: worst task wrote $guardedMax " +
         s"records (> $linearBound) — BandGuard not engaging at corpus level")
   }
 
@@ -126,21 +107,17 @@ class SkewSoakSpec extends SparkSuite {
     val fill = (0 until FillN).map(i => (20000L + i, noise(i)))
     val emb = (viral ++ fill).toDF("vec_id", "embedding").localCheckpoint()
 
-    def survWith(cap: Int, listener: Option[TaskShuffleListener]): Set[Long] = {
-      listener.foreach(spark.sparkContext.addSparkListener)
-      try {
-        val ids = SimOps.semanticDedupSurvivors(emb, k = 16,
+    def survWith(cap: Int): (Set[Long], Long) = {
+      val (ids, work) = SparkWork.measure(spark) {
+        SimOps.semanticDedupSurvivors(emb, k = 16,
             threshold = 0.95, cellCap = cap)
           .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-        listener.foreach(_ => Thread.sleep(1500))
-        ids
-      } finally listener.foreach(spark.sparkContext.removeSparkListener)
+      }
+      (ids, work.maxTaskShuffleRecords)
     }
     val cap = 8
-    val guardedL = new TaskShuffleListener
-    val guarded = survWith(cap, Some(guardedL))
-    val unguardedL = new TaskShuffleListener
-    val unguarded = survWith(Int.MaxValue, Some(unguardedL))
+    val (guarded, guardedMax) = survWith(cap)
+    val (unguarded, unguardedMax) = survWith(Int.MaxValue)
 
     assert(guarded == unguarded,
       s"guarded run changed survivors: only-guarded=${(guarded -- unguarded).take(5)} " +
@@ -156,11 +133,11 @@ class SkewSoakSpec extends SparkSuite {
     // traffic.
     val quadratic = ViralN.toLong * (ViralN - 1) / 2
     val linearBound = ViralN.toLong + 4096
-    assert(unguardedL.maxPerTask >= quadratic,
-      s"soak lost its teeth: unguarded worst task wrote ${unguardedL.maxPerTask} " +
+    assert(unguardedMax >= quadratic,
+      s"soak lost its teeth: unguarded worst task wrote $unguardedMax " +
         s"< expected quadratic $quadratic — viral cell no longer degenerate?")
-    assert(guardedL.maxPerTask <= linearBound,
-      s"guarded straggler not bounded: worst task wrote ${guardedL.maxPerTask} " +
+    assert(guardedMax <= linearBound,
+      s"guarded straggler not bounded: worst task wrote $guardedMax " +
         s"records (> $linearBound) — cellCap not engaging at corpus level")
   }
 }

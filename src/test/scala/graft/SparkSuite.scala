@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graftbus.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,39 +36,6 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", "4")
     .appName("graft-test")
     .getOrCreate()
-
-  private val WorkTag = "graft.test.work"
-
-  /** Runs `f` and counts the Spark jobs it launches from this thread,
-    * and the input records their tasks read. Jobs are matched by a
-    * local property, so work other threads launch is not counted. */
-  protected def sparkWork[T](f: => T): (T, Int, Long) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(WorkTag) == tag)) {
-          jobs.incrementAndGet()
-          j.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (stages.contains(t.stageId) && t.taskMetrics != null)
-          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(WorkTag, tag)
-    try {
-      val r = f
-      ListenerBusDrain(sc)
-      (r, jobs.get, records.get)
-    } finally {
-      sc.setLocalProperty(WorkTag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Set session confs for the duration of `f`, restoring previous
     * values after (the session is shared JVM-wide across suites). */

@@ -70,9 +70,8 @@ ACTION_RE = re.compile(r'"action":"(\w+)"')
 # one cross-action boundary (r17-vs-r16) is behind us and both sides
 # of every future diff are noop, so the transitional bridge-anchor
 # swap is retired — an action mismatch now fails loudly instead of
-# silently substituting a different prior. SPARK_GRAFT_BENCH_ACTION=
-# count remains a debugging knob only; its artifacts never enter this
-# gate.
+# silently substituting a different prior. graft.Bench now always
+# stamps "action":"noop"; only pre-r17 artifacts read "count".
 
 # Round 14: the former ITERATIVE-class special case (normalize the
 # in-session trainers by calib2 instead of calib) is subsumed by the
