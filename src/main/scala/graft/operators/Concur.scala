@@ -33,16 +33,17 @@ import scala.concurrent.duration.Duration
   * per-chain: nothing here reorders rows, partitions or commits
   * within a chain.
   *
-  * Driver-side local properties (job group/description, scheduler
-  * pool, interruptOnCancel) are InheritableThreadLocal — captured when
-  * a THREAD is created, so a shared pool would otherwise stamp
-  * whichever context created its threads onto every later chain
-  * (round 21, ADVICE r20: a stale job group makes cancelJobGroup
-  * cancel unrelated overlapped builds, or miss the ones it should
-  * cancel). par() therefore captures the CALLER's properties and
-  * sets/clears them explicitly inside each thunk, so every overlapped
-  * job carries exactly the group/pool/description of the call site
-  * that submitted it.
+  * Driver-side local properties (job group and tags, description,
+  * scheduler pool, interruptOnCancel, [[graft.SparkWork]]'s tag, any
+  * key a caller sets) are InheritableThreadLocal — captured when a
+  * THREAD is created, so a shared pool would otherwise stamp whichever
+  * context created its threads onto every later chain (a stale job
+  * group or tag makes a cancel hit unrelated overlapped builds, or
+  * miss the ones it should hit). par() therefore runs each thunk under
+  * a copy of ALL of the caller's properties, taken at the call, and
+  * gives the pool thread its own back afterwards, so every overlapped
+  * job carries exactly the properties of the call site that submitted
+  * it.
   */
 object Concur {
 
@@ -61,34 +62,20 @@ object Concur {
         t
       }))
 
-  /** Spark's driver-side local properties worth carrying from the
-    * caller into each overlapped chain (see class scaladoc). Constants
-    * mirror SparkContext's public setJobGroup/setJobDescription/
-    * scheduler-pool keys; the last is [[graft.SparkWork]]'s tag, so a
-    * chain's jobs count toward the caller that measures them. */
-  private val PropKeys = Seq(
-    "spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.scheduler.pool",
-    graft.SparkWork.TagKey)
-
-  /** Wrap a thunk so it runs under the CALLER's Spark local properties
-    * (captured now, on the calling thread) and clears them after — a
-    * pool thread must not leak one chain's job group into the next. */
+  /** Wrap a thunk so it runs under a copy of the CALLER's Spark local
+    * properties (taken now, on the calling thread); the pool thread's
+    * own properties are restored after it. */
   private def withCallerProps[A](body: => A): () => A = {
     import org.apache.spark.sql.SparkSession
-    val sc = SparkSession.getActiveSession
+    import org.apache.spark.sql.graftbridge.Bridge
+    SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext)
-    val props = sc.map(c => PropKeys.map(k => k -> c.getLocalProperty(k)))
-    () => {
-      sc.foreach { c =>
-        props.get.foreach { case (k, v) => c.setLocalProperty(k, v) }
+      .map(_.sparkContext) match {
+        case Some(sc) =>
+          val props = Bridge.captureLocalProperties(sc)
+          () => Bridge.withLocalProperties(sc, props)(body)
+        case None => () => body
       }
-      try body
-      finally sc.foreach { c =>
-        PropKeys.foreach(k => c.setLocalProperty(k, null))
-      }
-    }
   }
 
   /** Nested par() would make a pool thread await tasks that can only

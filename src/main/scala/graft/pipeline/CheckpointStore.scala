@@ -1,8 +1,17 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.UUID
 
-import org.apache.spark.sql.{Encoders, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 /** High-watermark store enabling incremental continuation — the Spark
@@ -47,6 +56,19 @@ trait CheckpointStore {
   * committed, not data rows). [[append]] updates the index and its
   * file set directly.
   *
+  * [[append]] commits its one row like [[JdbcCheckpointStore]] does,
+  * without an engine job: the driver writes a one-row Parquet file
+  * through parquet-hadoop under a hidden `.`-prefixed temp name in the
+  * checkpoint directory, then renames it to `part-<uuid>.parquet`, so
+  * readers never see a partial file and a leftover temp file is
+  * ignored like every other hidden file. The directory may also hold
+  * files Spark wrote (`Dataset.write.parquet`, which stores `ts` as
+  * INT96); this store writes `ts` as INT64 `TIMESTAMP(MICROS, true)`.
+  * Both encodings read back as the same `TimestampType` value under
+  * the entry schema, so a directory mixing the two reloads exactly.
+  * The UTC-adjusted flag matters: without it Spark reads the column as
+  * `TIMESTAMP_NTZ` and the reload fails.
+  *
   * Entries another writer commits between lookups are picked up by
   * the next lookup, but concurrent writers to one path are
   * unsupported, as the ingest loop, which runs its chains one at a
@@ -74,8 +96,10 @@ final class ParquetCheckpointStore(spark: SparkSession, path: String)
   private def merge(index: Map[Key, Mark], k: Key, m: Mark): Map[Key, Mark] =
     if (index.get(k).exists(later(_, m))) index else index.updated(k, m)
 
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+
   private def listing(): Set[String] =
-    DataFiles.list(spark.sparkContext.hadoopConfiguration, path).map(_.getPath.getName).toSet
+    DataFiles.list(hadoopConf, path).map(_.getPath.getName).toSet
 
   private def reload(files: Set[String]): Unit = {
     latest =
@@ -95,13 +119,65 @@ final class ParquetCheckpointStore(spark: SparkSession, path: String)
   }
 
   override def append(entry: CheckpointEntry): Unit = synchronized {
-    Seq(entry).toDS().write.mode(SaveMode.Append).parquet(path)
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    ParquetCheckpointStore.write(hadoopConf, new Path(path, s".$name.tmp"), new Path(path, name), entry)
     latest = merge(latest, (entry.job_type, entry.app_id), (entry.ts, entry.job_id))
-    // The write commits one file. If more appeared, another writer's
-    // file is among them, unread: leave the file set behind so the next
-    // lookup reloads.
+    // Adopt the file only if it is the one new name. If more appeared,
+    // another writer's file is among them, unread: leave the file set
+    // behind so the next lookup reloads.
     val added = listing() -- indexed
-    if (added.size == 1) indexed ++= added
+    if (added == Set(name)) indexed += name
+  }
+}
+
+private object ParquetCheckpointStore {
+
+  /** [[CheckpointEntry]] as Parquet, field for field with
+    * `Encoders.product[CheckpointEntry].schema`. */
+  private val schema = MessageTypeParser.parseMessageType(
+    """message checkpoint_entry {
+      |  required int64 job_id;
+      |  optional binary job_type (STRING);
+      |  optional int64 ts (TIMESTAMP(MICROS,true));
+      |  optional binary app_id (STRING);
+      |  optional int64 previous_job_id;
+      |  optional binary date_range (STRING);
+      |}""".stripMargin)
+
+  private val rows = new SimpleGroupFactory(schema)
+
+  /** Writes `e` as a one-row file at `tmp`, then renames it to `dst`.
+    * Throws if either step fails; a failed write removes what it left
+    * at `tmp`. */
+  def write(conf: Configuration, tmp: Path, dst: Path, e: CheckpointEntry): Unit = {
+    val row = rows.newGroup().append("job_id", e.job_id)
+    Option(e.job_type).foreach(v => row.append("job_type", v))
+    // Micros as Spark's encoder computes them, so both writers store
+    // the same instant.
+    Option(e.ts).foreach(t => row.append("ts", DateTimeUtils.fromJavaTimestamp(t)))
+    Option(e.app_id).foreach(v => row.append("app_id", v))
+    e.previous_job_id.foreach(v => row.append("previous_job_id", v))
+    e.date_range.foreach(v => row.append("date_range", v))
+
+    val fs = tmp.getFileSystem(conf)
+    try {
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf)
+        .withType(schema)
+        // one row: neither a codec nor a dictionary makes it smaller
+        .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
+        .withDictionaryEncoding(false)
+        .build()
+      try w.write(row) finally w.close()
+    } catch {
+      case t: Throwable =>
+        scala.util.Try(fs.delete(tmp, false))
+        throw t
+    }
+    if (!fs.rename(tmp, dst)) {
+      scala.util.Try(fs.delete(tmp, false))
+      throw new java.io.IOException(s"checkpoint commit failed: could not rename $tmp to $dst")
+    }
   }
 }
 

@@ -7,7 +7,6 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
 
 /** The reference's orchestration loop re-expressed on Spark:
   *
@@ -16,7 +15,7 @@ import org.apache.spark.sql.functions.{count, lit}
   *        model of `continueFrom`; job ids are monotone)
   *  - A6  download + gunzip   → [[UnityExport.readJob]] (gz by ext),
   *        parsed once: the sink's write is the only pass, and the row
-  *        count is an [[Observation]] on that write
+  *        count is an [[Observation]] on that write's raw JSON scan
   *  - A7/A8/A9 route + load   → tenant dataset, table = report type
   *        ("Table name = Report Name", reference README), via
   *        [[WarehouseSink]]
@@ -32,6 +31,14 @@ import org.apache.spark.sql.functions.{count, lit}
   * read→write is a distributed Spark job; the driver loop only
   * sequences commits so the checkpoint stays a consistent high
   * watermark.
+  *
+  * Committing one export job costs one Spark job: the sink's write.
+  * Both checkpoint stores look up and append without a Spark job
+  * (a [[ParquetCheckpointStore]] scans only to reload files another
+  * writer added). The row count is observed on the raw scan, below
+  * the `job_id` literal, so the optimizer still sees that every row
+  * of the write carries one `job_id` and plans no sort for the
+  * `job_id`-partitioned sink.
   */
 final class IngestJob(
     spark: SparkSession,
@@ -68,8 +75,7 @@ final class IngestJob(
         if (!UnityExport.hasData(spark, dir)) 0L
         else {
           val rows = Observation()
-          sink.load(UnityExport.readJob(spark, dir, jobId)
-            .observe(rows, count(lit(1)).as("rows")), dataset, jobType)
+          sink.load(UnityExport.readJob(spark, dir, jobId, rows), dataset, jobType)
           observedRows(rows, jobId)
         }
       if (n > 0) {

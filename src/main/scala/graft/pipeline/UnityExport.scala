@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,7 +57,19 @@ object UnityExport {
   /** Read one export job directory with the declared schema, with
     * parsed event time and lineage columns attached. */
   def readJob(spark: SparkSession, jobDir: String, jobId: Long): DataFrame =
-    spark.read.schema(schema).json(jobDir)
+    withLineage(spark.read.schema(schema).json(jobDir), jobId)
+
+  /** [[readJob]], with `rows` counting the job's records as column
+    * `rows` when the result executes. The count is observed on the raw
+    * JSON scan, below the lineage columns: above them it would sit
+    * between the `job_id` literal and a write partitioned by `job_id`,
+    * and the optimizer could no longer see that every row carries the
+    * same `job_id`, so it would sort the rows before writing them. */
+  def readJob(spark: SparkSession, jobDir: String, jobId: Long, rows: Observation): DataFrame =
+    withLineage(spark.read.schema(schema).json(jobDir).observe(rows, count(lit(1)).as("rows")), jobId)
+
+  private def withLineage(records: DataFrame, jobId: Long): DataFrame =
+    records
       .withColumn("event_ts", to_timestamp(col("ts")))
       .withColumn("job_id", lit(jobId))
 }

@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.Properties
+
 import org.apache.spark.SparkContext
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.util.Utils
 
 /** Minimal bridge to the `private[sql]` Column↔Expression converters —
   * the sanctioned pattern for third-party Catalyst expressions (the
@@ -21,6 +24,20 @@ object Bridge extends Logging {
     * asynchronously, so counts read right after an action returns can
     * miss its last task-end events; after this call they cannot. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** A copy of every Spark local property of the calling thread. */
+  def captureLocalProperties(sc: SparkContext): Properties =
+    Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Run `body` on this thread under exactly `props`, then give the
+    * thread back its own properties — the way Spark's
+    * `SQLExecution.withThreadLocalCaptured` runs work on its broadcast
+    * threads. */
+  def withLocalProperties[T](sc: SparkContext, props: Properties)(body: => T): T = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(props)
+    try body finally sc.setLocalProperties(own)
+  }
 
   /** Release the block-manager storage behind a `localCheckpoint()`ed
     * Dataset. Iterative operators (PageRank, connected components,

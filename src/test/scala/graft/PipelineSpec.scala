@@ -236,6 +236,46 @@ class PipelineSpec extends SparkSuite {
     assert(res == Map(("app-e", "custom") -> 15L, ("app-e", "transaction") -> 5L))
     assert(work.inputRecords == 20L,
       s"read ${work.inputRecords} input records for 20 committed rows")
+    // one Spark job per export job: the sink's write
+    assert(work.jobs <= 3, s"ran ${work.jobs} Spark jobs for 3 export jobs")
+  }
+
+  test("the sink's write plans no sort: the row count is observed below the job_id literal") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints10",
+      warehouseRoot = s"$root/warehouse10",
+      tenants = Seq(TenantConfig("app-w", "Dataset_W")),
+      reportTypes = Seq("custom"))
+    writeJob("app-w", "custom", 801, rows = 12, gzip = true)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val warehouse = new File(cfg.warehouseRoot).getAbsolutePath
+    // the sink's writes only, not the checkpoint store's
+    def intoWarehouse(plan: SparkPlan) = plan.collectFirst {
+      case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) => i.outputPath.toUri.getPath
+    }.exists(_.startsWith(warehouse))
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (intoWarehouse(qe.executedPlan)) writes.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n =
+      try IngestJob(spark, cfg, new ParquetCheckpointStore(spark, cfg.checkpointPath),
+        new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier).run("app-w", "custom")
+      finally {
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(n == 12)
+    assert(writes.size == 1, s"captured ${writes.size} sink writes")
+    val plan = writes.peek()
+    assert(helper.find(plan)(_.isInstanceOf[SortExec]).isEmpty, s"the write sorts its rows:\n$plan")
   }
 
   test("a lookup over an unchanged checkpoint listing launches no Spark job") {
@@ -308,6 +348,87 @@ class PipelineSpec extends SparkSuite {
       assert(s.findPreviousJobId("custom", "app-i").contains(7L))
       assert(s.findPreviousJobId("transaction", "app-i").contains(3L))
     }
+  }
+
+  test("a checkpoint append launches no Spark job") {
+    val store = new ParquetCheckpointStore(spark, s"$root/checkpoints11")
+    val e = CheckpointEntry(1L, "custom",
+      java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "app-x", None, None)
+    val (_, work) = SparkWork.measure(spark)(store.append(e))
+    assert(work.jobs == 0, s"append ran ${work.jobs} Spark jobs")
+    assert(new ParquetCheckpointStore(spark, s"$root/checkpoints11")
+      .findPreviousJobId("custom", "app-x").contains(1L))
+  }
+
+  test("checkpoint files written by Spark and by the store reload to the same answers") {
+    import org.apache.spark.sql.{Encoders, SaveMode}
+    import spark.implicits._
+    val path = s"$root/checkpoints12"
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123456")
+    val t2 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123457")
+    // the format of existing deployments: one Spark write per entry
+    def sparkWrite(e: CheckpointEntry): Unit =
+      Seq(e).toDS().write.mode(SaveMode.Append).parquet(path)
+    val store = new ParquetCheckpointStore(spark, path)
+    val bySpark = Seq(
+      CheckpointEntry(5L, "custom", t1, "app-m", None, Some("2024-01-01/2024-01-02")),
+      CheckpointEntry(3L, "transaction", t2, "app-m", Some(1L), None),
+      CheckpointEntry(8L, "custom", t1, "app-n", Some(2L), Some("r")))
+    val byStore = Seq(
+      CheckpointEntry(7L, "custom", t1, "app-m", Some(5L), None),
+      CheckpointEntry(9L, "transaction", t1, "app-m", None, Some("2024-01-03/2024-01-04")),
+      CheckpointEntry(6L, "custom", t1, "app-n", None, None))
+    bySpark.zip(byStore).foreach { case (a, b) => sparkWrite(a); store.append(b) }
+
+    // ts DESC, job_id DESC across the two writers: a tie on ts goes to
+    // the greater job id whichever wrote it; a later ts wins outright
+    val expected = Map(("custom", "app-m") -> 7L, ("transaction", "app-m") -> 3L, ("custom", "app-n") -> 8L)
+    def answers(s: CheckpointStore) =
+      expected.keys.map { case (t, a) => (t, a) -> s.findPreviousJobId(t, a).get }.toMap
+    assert(answers(store) == expected)
+    assert(answers(new ParquetCheckpointStore(spark, path)) == expected)
+
+    // exact round trip: sub-millisecond micros, Some and None
+    def readAll() = spark.read.schema(Encoders.product[CheckpointEntry].schema).parquet(path)
+      .as[CheckpointEntry].collect().toSet
+    assert(readAll() == (bySpark ++ byStore).toSet)
+
+    // a leftover hidden temp file is not a checkpoint file
+    val leftover = new File(path, ".part-leftover.parquet.tmp")
+    java.nio.file.Files.write(leftover.toPath, "not parquet".getBytes(StandardCharsets.UTF_8))
+    val (same, work) = SparkWork.measure(spark)(answers(store))
+    assert(same == expected && work.jobs == 0, s"the leftover changed the listing: ${work.jobs} jobs")
+    assert(answers(new ParquetCheckpointStore(spark, path)) == expected)
+    assert(readAll() == (bySpark ++ byStore).toSet)
+  }
+
+  test("a checkpoint append that cannot write throws, commits nothing, and the rerun ingests once") {
+    val blocker = new File(s"$root/blocker")
+    java.nio.file.Files.write(blocker.toPath, "a regular file".getBytes(StandardCharsets.UTF_8))
+    val badPath = s"${blocker.getPath}/checkpoints"
+    val bad = new ParquetCheckpointStore(spark, badPath)
+    intercept[Exception] {
+      bad.append(CheckpointEntry(1L, "custom",
+        java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "app-y", None, None))
+    }
+    assert(bad.findPreviousJobId("custom", "app-y").isEmpty)
+    assert(dataFilesUnder(blocker).isEmpty && blocker.isFile)
+
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints13",
+      warehouseRoot = s"$root/warehouse13",
+      tenants = Seq(TenantConfig("app-y", "Dataset_Y")),
+      reportTypes = Seq("custom"))
+    writeJob("app-y", "custom", 901, rows = 5, gzip = false)
+    val sink = new ParquetWarehouseSink(cfg.warehouseRoot)
+    val notifier = new RecordingNotifier
+    assert(IngestJob(spark, cfg, bad, sink, notifier).runAll() == Map(("app-y", "custom") -> -1L))
+    assert(notifier.messages.size == 1, s"messages: ${notifier.messages}")
+
+    val good = new ParquetCheckpointStore(spark, cfg.checkpointPath)
+    assert(IngestJob(spark, cfg, good, sink, new LogNotifier).runAll() == Map(("app-y", "custom") -> 5L))
+    assert(spark.read.parquet(s"${cfg.warehouseRoot}/Dataset_Y/custom").count() == 5)
+    assert(good.findPreviousJobId("custom", "app-y").contains(901L))
   }
 
   test("a job whose files hold zero records halts with no checkpoint and no data file") {
