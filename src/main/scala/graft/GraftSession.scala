@@ -8,7 +8,15 @@ import org.apache.spark.sql.SparkSession
   * [[graft.plans.GraftExtensions]], so a user-written HOF cosine is
   * rewritten to the codegen'd expression in the graded paths too, not
   * only where RuleSpec installs the rule by hand (EntrySpec asserts
-  * the rewrite fires under exactly this config). */
+  * the rewrite fires under exactly this config).
+  *
+  * Local files are written through [[NoForkLocalFileSystem]]
+  * (`spark.hadoop.fs.file.impl`), which sets permissions without
+  * forking `chmod`: every sink write, checkpoint append and model save
+  * creates files. Hadoop caches FileSystem instances JVM-wide by
+  * scheme, authority and user, not by configuration, so a `file:`
+  * FileSystem another configuration created earlier in the JVM wins
+  * over this setting. */
 object GraftSession {
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -19,6 +27,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
 
   /** Local session sized by the SPARK_GRAFT_CPUS contract. */
   def local(cpus: String): SparkSession = {

@@ -3,6 +3,8 @@ package graft.pipeline
 import java.sql.Timestamp
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -46,28 +48,54 @@ trait CheckpointStore {
   * Lookups are answered from a driver-side index holding the latest
   * `(ts, job_id)` per `(job_type, app_id)` — the incremental top-k
   * pattern with k = 1: the answer is kept current as entries arrive
-  * instead of re-scanning every one-row checkpoint file per lookup.
-  * Each lookup lists the checkpoint directory (one metadata call, no
-  * Spark job); only when the listing differs from the data files the
-  * index reflects — files another store instance or process wrote —
-  * is the index reloaded, with one scan under the explicit entry
-  * schema, reduced to latest-per-key on the driver (no shuffle,
-  * nothing cached; checkpoint rows number the export jobs ever
-  * committed, not data rows). [[append]] updates the index and its
-  * file set directly.
+  * instead of re-scanning every checkpoint file per lookup. Each
+  * lookup lists the checkpoint directory (one metadata call, no Spark
+  * job); only when the listing differs from the data files the index
+  * reflects — files another store instance or process wrote — is the
+  * index reloaded, with one scan under the explicit entry schema that
+  * also reads each row's `_metadata.file_name`, reduced to
+  * latest-per-key on the driver (no shuffle, nothing cached). Lookups
+  * never write.
   *
   * [[append]] commits its one row like [[JdbcCheckpointStore]] does,
   * without an engine job: the driver writes a one-row Parquet file
   * through parquet-hadoop under a hidden `.`-prefixed temp name in the
   * checkpoint directory, then renames it to `part-<uuid>.parquet`, so
   * readers never see a partial file and a leftover temp file is
-  * ignored like every other hidden file. The directory may also hold
-  * files Spark wrote (`Dataset.write.parquet`, which stores `ts` as
-  * INT96); this store writes `ts` as INT64 `TIMESTAMP(MICROS, true)`.
-  * Both encodings read back as the same `TimestampType` value under
-  * the entry schema, so a directory mixing the two reloads exactly.
-  * The UTC-adjusted flag matters: without it Spark reads the column as
-  * `TIMESTAMP_NTZ` and the reload fails.
+  * ignored like every other hidden file. The entry is durable once
+  * that rename returns.
+  *
+  * The directory is kept at O(log N) data files for N entries, so a
+  * lookup's listing stays a few names long however many export jobs
+  * were committed (the Bentley–Saxe logarithmic method, a binary
+  * counter over file sizes). After its rename, and only when the
+  * listing is exactly the indexed files plus the new one, [[append]]
+  * merges: while two indexed files sit at one level, ⌊log2 rows⌋, it
+  * writes the rows of both into one new file (temp name, then rename)
+  * and deletes them. N appends to an empty directory leave popcount(N)
+  * files, and each row is rewritten O(log N) times, amortized. A merge
+  * reads no file: the store holds the entries of every indexed file in
+  * driver memory — the rows a reload collects anyway, one per export
+  * job ever committed — and writes the merged file from there. A merge
+  * deletes only files whose every row its output holds. A merge that
+  * fails is skipped with a warning on stderr; the entry it followed is
+  * already committed, so [[append]] still returns.
+  *
+  * Rows equal in every column are written once by a merge. Only a
+  * merge cut short after its rename (the process died, or a delete
+  * failed) leaves such copies: its output and an input both hold the
+  * rows. Lookups are unaffected, and the next merge that holds both
+  * copies writes them once and deletes every file its output covers.
+  *
+  * The directory may also hold files Spark wrote
+  * (`Dataset.write.parquet`, which stores `ts` as INT96); this store
+  * writes `ts` as INT64 `TIMESTAMP(MICROS, true)`. Both encodings read
+  * back as the same `TimestampType` value under the entry schema, so a
+  * directory mixing the two reloads exactly, and a merge folds the
+  * reloaded rows of Spark-written files like its own. The UTC-adjusted
+  * flag matters: without it Spark reads the column as `TIMESTAMP_NTZ`
+  * and the reload fails. Every file stays a flat `part-*.parquet`:
+  * `spark.read.parquet(path)` returns every entry ever appended.
   *
   * Entries another writer commits between lookups are picked up by
   * the next lookup, but concurrent writers to one path are
@@ -82,8 +110,8 @@ final class ParquetCheckpointStore(spark: SparkSession, path: String)
   private type Mark = (Timestamp, Long)    // (ts, job_id)
 
   private var latest = Map.empty[Key, Mark]
-  // names of the data files `latest` reflects
-  private var indexed = Set.empty[String]
+  // the data files `latest` reflects, by name, with the entries each holds
+  private var files = Map.empty[String, Vector[CheckpointEntry]]
 
   /** ts DESC, job_id DESC: the later commit wins, the greater job id on
     * a tie — the reference's ORDER BY ts DESC plus a deterministic
@@ -93,41 +121,76 @@ final class ParquetCheckpointStore(spark: SparkSession, path: String)
     c > 0 || c == 0 && a._2 > b._2
   }
 
-  private def merge(index: Map[Key, Mark], k: Key, m: Mark): Map[Key, Mark] =
+  private def marked(index: Map[Key, Mark], e: CheckpointEntry): Map[Key, Mark] = {
+    val (k, m) = ((e.job_type, e.app_id), (e.ts, e.job_id))
     if (index.get(k).exists(later(_, m))) index else index.updated(k, m)
+  }
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   private def listing(): Set[String] =
     DataFiles.list(hadoopConf, path).map(_.getPath.getName).toSet
 
-  private def reload(files: Set[String]): Unit = {
-    latest =
-      if (files.isEmpty) Map.empty
-      else spark.read.schema(Encoders.product[CheckpointEntry].schema).parquet(path)
-        .select(col("job_type"), col("app_id"), col("ts"), col("job_id"))
-        .as[(String, String, Timestamp, Long)]
+  private def reload(listed: Set[String]): Unit = {
+    val schema = Encoders.product[CheckpointEntry].schema
+    val read =
+      if (listed.isEmpty) Map.empty[String, Vector[CheckpointEntry]]
+      else spark.read.schema(schema).parquet(path)
+        .select(struct(schema.fieldNames.toSeq.map(col): _*).as("_1"), col("_metadata.file_name").as("_2"))
+        .as[(CheckpointEntry, String)]
         .collect()
-        .foldLeft(Map.empty[Key, Mark]) { case (index, (t, a, ts, id)) => merge(index, (t, a), (ts, id)) }
-    indexed = files
+        .groupMap(_._2)(_._1).map { case (f, rows) => f -> rows.toVector }
+    // a listed file the scan found no row in holds none
+    files = listed.map(_ -> Vector.empty[CheckpointEntry]).toMap ++ read
+    latest = files.valuesIterator.flatten.foldLeft(Map.empty[Key, Mark])(marked)
   }
 
   override def findPreviousJobId(jobType: String, appId: String): Option[Long] = synchronized {
-    val files = listing()
-    if (files != indexed) reload(files)
+    val listed = listing()
+    if (listed != files.keySet) reload(listed)
     latest.get((jobType, appId)).map(_._2)
   }
 
   override def append(entry: CheckpointEntry): Unit = synchronized {
-    val name = s"part-${UUID.randomUUID()}.parquet"
-    ParquetCheckpointStore.write(hadoopConf, new Path(path, s".$name.tmp"), new Path(path, name), entry)
-    latest = merge(latest, (entry.job_type, entry.app_id), (entry.ts, entry.job_id))
-    // Adopt the file only if it is the one new name. If more appeared,
-    // another writer's file is among them, unread: leave the file set
-    // behind so the next lookup reloads.
-    val added = listing() -- indexed
-    if (added == Set(name)) indexed += name
+    val name = ParquetCheckpointStore.write(hadoopConf, path, Vector(entry))
+    latest = marked(latest, entry)
+    // Adopt the file, and merge, only if the listing is the indexed
+    // files plus this one. Anything else is another writer's change,
+    // unread: leave the file set behind so the next lookup reloads.
+    if (listing() == files.keySet + name) {
+      files += name -> Vector(entry)
+      while (mergeOnce()) {}
+    }
   }
+
+  private def level(rows: Int): Int = 31 - Integer.numberOfLeadingZeros(rows max 1)
+
+  /** Merges the two smallest files of the lowest level holding two;
+    * returns whether it merged and deleted every file its output
+    * covers, so the caller may go on. */
+  private def mergeOnce(): Boolean =
+    files.toSeq.groupBy { case (_, rows) => level(rows.size) }.filter(_._2.size > 1)
+      .minByOption(_._1).exists { case (_, twins) =>
+        val Seq(a, b) = twins.sortBy { case (n, rows) => (rows.size, n) }.take(2)
+        val rows = (a._2 ++ b._2).distinct
+        try {
+          val name = ParquetCheckpointStore.write(hadoopConf, path, rows)
+          // the two inputs, and any copy a merge cut short left behind
+          val held = rows.toSet
+          val covered = files.collect { case (n, r) if r.forall(held) => n }
+          val fs = new Path(path).getFileSystem(hadoopConf)
+          val deleted = covered.filter(n => scala.util.Try(fs.delete(new Path(path, n), false)).getOrElse(false))
+          files = files -- deleted + (name -> rows)
+          if (deleted.size < covered.size)
+            System.err.println(s"[checkpoint] $path: kept ${covered.size - deleted.size} merged file(s) " +
+              "a delete did not remove; the next merge holding their rows writes them once")
+          deleted.size == covered.size
+        } catch {
+          case NonFatal(t) =>
+            System.err.println(s"[checkpoint] $path: merge skipped: $t")
+            false
+        }
+      }
 }
 
 private object ParquetCheckpointStore {
@@ -144,31 +207,26 @@ private object ParquetCheckpointStore {
       |  optional binary date_range (STRING);
       |}""".stripMargin)
 
-  private val rows = new SimpleGroupFactory(schema)
+  private val groups = new SimpleGroupFactory(schema)
 
-  /** Writes `e` as a one-row file at `tmp`, then renames it to `dst`.
+  /** Writes `entries` as one file under a hidden temp name in `dir`,
+    * then renames it to a new `part-<uuid>.parquet`; returns that name.
     * Throws if either step fails; a failed write removes what it left
-    * at `tmp`. */
-  def write(conf: Configuration, tmp: Path, dst: Path, e: CheckpointEntry): Unit = {
-    val row = rows.newGroup().append("job_id", e.job_id)
-    Option(e.job_type).foreach(v => row.append("job_type", v))
-    // Micros as Spark's encoder computes them, so both writers store
-    // the same instant.
-    Option(e.ts).foreach(t => row.append("ts", DateTimeUtils.fromJavaTimestamp(t)))
-    Option(e.app_id).foreach(v => row.append("app_id", v))
-    e.previous_job_id.foreach(v => row.append("previous_job_id", v))
-    e.date_range.foreach(v => row.append("date_range", v))
-
+    * at the temp name. */
+  def write(conf: Configuration, dir: String, entries: Seq[CheckpointEntry]): String = {
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    val (tmp, dst) = (new Path(dir, s".$name.tmp"), new Path(dir, name))
     val fs = tmp.getFileSystem(conf)
     try {
       val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
         .withConf(conf)
         .withType(schema)
-        // one row: neither a codec nor a dictionary makes it smaller
+        // a few rows per export job ever committed: neither a codec
+        // nor a dictionary makes files this small smaller
         .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
         .withDictionaryEncoding(false)
         .build()
-      try w.write(row) finally w.close()
+      try entries.foreach(e => w.write(row(e))) finally w.close()
     } catch {
       case t: Throwable =>
         scala.util.Try(fs.delete(tmp, false))
@@ -178,6 +236,19 @@ private object ParquetCheckpointStore {
       scala.util.Try(fs.delete(tmp, false))
       throw new java.io.IOException(s"checkpoint commit failed: could not rename $tmp to $dst")
     }
+    name
+  }
+
+  private def row(e: CheckpointEntry) = {
+    val row = groups.newGroup().append("job_id", e.job_id)
+    Option(e.job_type).foreach(v => row.append("job_type", v))
+    // Micros as Spark's encoder computes them, so both writers store
+    // the same instant.
+    Option(e.ts).foreach(t => row.append("ts", DateTimeUtils.fromJavaTimestamp(t)))
+    Option(e.app_id).foreach(v => row.append("app_id", v))
+    e.previous_job_id.foreach(v => row.append("previous_job_id", v))
+    e.date_range.foreach(v => row.append("date_range", v))
+    row
   }
 }
 

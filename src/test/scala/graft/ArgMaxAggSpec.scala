@@ -17,13 +17,17 @@ class ArgMaxAggSpec extends SparkSuite {
   // (group, value, id) candidates: g1 plain argmax; g2 exact tie
   // (smaller id must win); g3 NaN present (NaN is greatest in Spark's
   // double order — the struct-max adopts it, so must we); g4 -Inf
-  // values only; g5 tie at the maximum with ids out of insertion order.
+  // values only; g5 tie at the maximum with ids out of insertion order;
+  // g6 -0.0 ties 0.0 (Spark's compareDoubles: `==` first), so the
+  // smaller id wins; g7 NaN ties NaN at the maximum.
   private val rows = Seq(
     ("g1", 0.2, 10L), ("g1", 0.9, 7L), ("g1", 0.5, 3L),
     ("g2", 0.7, 22L), ("g2", 0.7, 11L), ("g2", 0.1, 1L),
     ("g3", 0.99, 5L), ("g3", Double.NaN, 9L), ("g3", 0.5, 2L),
     ("g4", Double.NegativeInfinity, 4L), ("g4", Double.NegativeInfinity, 2L),
-    ("g5", 1.0, 30L), ("g5", 1.0, -8L), ("g5", 0.0, -99L))
+    ("g5", 1.0, 30L), ("g5", 1.0, -8L), ("g5", 0.0, -99L),
+    ("g6", -0.0, 5L), ("g6", 0.0, 9L), ("g6", -1.0, 1L),
+    ("g7", Double.NaN, 12L), ("g7", Double.NaN, 4L), ("g7", 1.0, 1L))
 
   test("matches max(struct(value, -id)) on ties, NaN, -Inf, negative ids") {
     val df = rows.toDF("g", "v", "id")
@@ -37,8 +41,19 @@ class ArgMaxAggSpec extends SparkSuite {
       .agg(ArgMaxAgg.udafColumn(col("v"), col("id")).as("id"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byStruct === Map(
-      "g1" -> 7L, "g2" -> 11L, "g3" -> 9L, "g4" -> 2L, "g5" -> -8L))
+      "g1" -> 7L, "g2" -> 11L, "g3" -> 9L, "g4" -> 2L, "g5" -> -8L,
+      "g6" -> 5L, "g7" -> 4L))
     assert(byAgg === byStruct)
+  }
+
+  test("a null value fails the query with an error naming ArgMaxAgg") {
+    val df = Seq(("g1", Some(0.5), 1L), ("g1", None, 2L)).toDF("g", "v", "id")
+    val e = intercept[Exception] {
+      df.groupBy(col("g")).agg(ArgMaxAgg.udafColumn(col("v"), col("id"))).collect()
+    }
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(t => String.valueOf(t.getMessage).contains("ArgMaxAgg: null value")),
+      s"error does not name ArgMaxAgg: $e")
   }
 
   test("deterministic across partitionings (merge order cannot leak)") {

@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.Compaction
 
-/** A local filesystem whose `delete` of one chosen path reports
-  * failure and deletes nothing — the shim behind the failed-delete
-  * compaction test. Must be top-level with a no-arg constructor —
-  * Hadoop instantiates it reflectively from `fs.nodelete.impl`. */
+/** A local filesystem whose `delete` of a chosen path reports failure
+  * and deletes nothing — the shim behind the failed-delete compaction
+  * and checkpoint-merge tests. Must be top-level with a no-arg
+  * constructor — Hadoop instantiates it reflectively from
+  * `fs.nodelete.impl`. */
 class NoDeleteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "nodelete"
   override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
   override def delete(p: Path, recursive: Boolean): Boolean =
-    if (p.toUri.getPath == NoDeleteFs.refused) false
+    if (NoDeleteFs.refuses(p.toUri.getPath)) false
     else super.delete(p, recursive)
   // plain statuses: the raw local ones load permissions through a
   // java.io.File of the path's URI, which rejects any scheme but file
@@ -25,7 +26,7 @@ class NoDeleteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 object NoDeleteFs {
-  @volatile var refused: String = ""
+  @volatile var refuses: String => Boolean = _ => false
 }
 
 /** Compaction must reduce file count without changing data, and be a
@@ -79,11 +80,11 @@ class CompactionSpec extends SparkSuite {
     val dir = new File("target/test-fixtures/compact/nodelete").getAbsolutePath
     Tables.orders(spark, Sf).repartition(8).write.mode("overwrite").parquet(dir)
     val rows = spark.read.parquet(dir).count()
-    NoDeleteFs.refused = dir
+    NoDeleteFs.refuses = _ == dir
     val e =
       try intercept[java.io.IOException] {
         Compaction.compact(spark, s"nodelete://$dir", targetBytes = 1L << 30)
-      } finally NoDeleteFs.refused = ""
+      } finally NoDeleteFs.refuses = _ => false
     assert(e.getMessage.contains(s"$dir.compact-tmp"), e.getMessage)
     // a rename onto the surviving directory would have moved the
     // compacted copy inside it; the old table must stay as it was

@@ -402,6 +402,103 @@ class PipelineSpec extends SparkSuite {
     assert(readAll() == (bySpark ++ byStore).toSet)
   }
 
+  /** `10:00:<sec>.<micros>` on 2024-01-01: whole micros, below the ms. */
+  private def at(sec: Int, micros: Int): java.sql.Timestamp = {
+    val t = java.sql.Timestamp.valueOf(f"2024-01-01 10:00:$sec%02d")
+    t.setNanos(micros * 1000)
+    t
+  }
+
+  /** The reference's lookup, brute force over every entry. */
+  private def latestPerKey(es: Seq[CheckpointEntry]): Map[(String, String), Long] =
+    es.groupBy(e => (e.job_type, e.app_id)).map { case (k, g) => k -> g.maxBy(e => (e.ts.toInstant, e.job_id)).job_id }
+
+  private def answers(s: CheckpointStore, keys: Iterable[(String, String)]) =
+    keys.map { case (t, a) => (t, a) -> s.findPreviousJobId(t, a).get }.toMap
+
+  /** Every row of the checkpoint directory, as plain Spark reads it, in
+    * job_id order: the multiset of entries, copies included. */
+  private def entriesIn(dir: String): Seq[CheckpointEntry] = {
+    import spark.implicits._
+    spark.read.parquet(dir).as[CheckpointEntry].collect().toSeq.sortBy(_.job_id)
+  }
+
+  test("1,000 checkpoint appends leave at most 10 files, and a fresh store answers as a latest-per-key fold") {
+    val path = s"$root/checkpoints14"
+    val rnd = new scala.util.Random(14)
+    val entries = (1 to 1000).map { i =>
+      // 60 seconds x 3 micros: many ts ties across the 12 keys
+      CheckpointEntry(i.toLong, Seq("custom", "transaction", "appStart")(rnd.nextInt(3)),
+        at(rnd.nextInt(60), rnd.nextInt(3)), s"app-${rnd.nextInt(4)}",
+        Some(i - 1L).filter(_ > 0), if (i % 7 == 0) Some(s"r$i") else None)
+    }
+    val store = new ParquetCheckpointStore(spark, path)
+    val (_, appendWork) = SparkWork.measure(spark)(entries.foreach(store.append))
+    assert(appendWork.jobs == 0, s"1,000 appends ran ${appendWork.jobs} Spark jobs")
+    val files = dataFilesUnder(new File(path)).map(_.getName).toSet
+    assert(files.size <= 10, s"${files.size} checkpoint files after 1,000 appends")
+
+    val expected = latestPerKey(entries)
+    assert(answers(store, expected.keys) == expected)
+    val fresh = new ParquetCheckpointStore(spark, path)
+    val (got, reloadWork) = SparkWork.measure(spark)(answers(fresh, expected.keys))
+    assert(got == expected)
+    assert(reloadWork.jobs == 1, s"the reload ran ${reloadWork.jobs} Spark jobs")
+    // lookups never write
+    assert(dataFilesUnder(new File(path)).map(_.getName).toSet == files)
+    // none lost, none doubled, every column exact
+    assert(entriesIn(path) == entries)
+  }
+
+  test("Spark-written checkpoint files fold into the store's merges and round-trip exactly") {
+    import org.apache.spark.sql.SaveMode
+    import spark.implicits._
+    val path = s"$root/checkpoints15"
+    def entry(i: Int) = CheckpointEntry(i.toLong, Seq("custom", "transaction")(i % 2),
+      at(i % 4, 123456 + i % 3), s"app-${i % 3}",
+      if (i % 2 == 0) Some(i - 1L) else None, if (i % 3 == 0) Some(s"2024-01-0${i % 9 + 1}") else None)
+    val legacy = (1 to 30).map(entry)
+    legacy.foreach(e => Seq(e).toDS().write.mode(SaveMode.Append).parquet(path))
+    assert(dataFilesUnder(new File(path)).size == 30)
+
+    val store = new ParquetCheckpointStore(spark, path)
+    assert(answers(store, latestPerKey(legacy).keys) == latestPerKey(legacy))
+    val added = (31 to 40).map(entry)
+    added.foreach(store.append)
+    val all = legacy ++ added
+    val files = dataFilesUnder(new File(path))
+    assert(files.size <= 6, s"${files.size} checkpoint files hold 40 entries")
+    assert(entriesIn(path) == all)
+    for (s <- Seq(store, new ParquetCheckpointStore(spark, path))) {
+      assert(answers(s, latestPerKey(all).keys) == latestPerKey(all))
+      assert(s.findPreviousJobId("custom", "no-such-app").isEmpty)
+    }
+  }
+
+  test("a merge cut short by a failed delete keeps lookups right, and the next merge writes each row once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.nodelete.impl", classOf[NoDeleteFs].getName)
+    val dir = new File(s"$root/checkpoints16").getAbsolutePath
+    val path = s"nodelete://$dir"
+    val es = (1 to 3).map(i => CheckpointEntry(i.toLong, "custom", at(i, 7), "app-q", Some(i - 1L), None))
+    val store = new ParquetCheckpointStore(spark, path)
+    store.append(es(0))
+    NoDeleteFs.refuses = _.startsWith(s"$dir/")
+    try store.append(es(1)) finally NoDeleteFs.refuses = _ => false
+    // the merged file landed; both of its inputs stayed
+    assert(dataFilesUnder(new File(dir)).size == 3)
+    assert(entriesIn(dir) == Seq(es(0), es(0), es(1), es(1)))
+    val fresh = new ParquetCheckpointStore(spark, path)
+    for (s <- Seq(store, fresh)) assert(s.findPreviousJobId("custom", "app-q").contains(2L))
+
+    // the next merge holds both copies: it writes them once and deletes
+    // every file its output covers
+    fresh.append(es(2))
+    assert(entriesIn(dir) == es)
+    assert(dataFilesUnder(new File(dir)).size <= 2)
+    for (s <- Seq(store, fresh, new ParquetCheckpointStore(spark, path)))
+      assert(s.findPreviousJobId("custom", "app-q").contains(3L))
+  }
+
   test("a checkpoint append that cannot write throws, commits nothing, and the rerun ingests once") {
     val blocker = new File(s"$root/blocker")
     java.nio.file.Files.write(blocker.toPath, "a regular file".getBytes(StandardCharsets.UTF_8))
