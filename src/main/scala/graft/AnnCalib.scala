@@ -42,7 +42,7 @@ object AnnCalib {
     val sections = sys.env.getOrElse("SPARK_GRAFT_CALIB_SECTIONS", "grid,shapes")
       .split(",").map(_.trim).toSet
     val spark = GraftSession.local(cpus)
-    import graft.operators.AnnBudget
+    import graft.operators.{AnnBudget, AnnIndex}
 
     val oneDir = "target/scale/x1"
     ScaleBench.synthesize(spark, baseDir, oneDir, 1)
@@ -62,8 +62,7 @@ object AnnCalib {
       val cells = AnnBudget.buildCells(n)
       val dir = s"target/scale/ann_calib_$label"
       graft.queries.SimOps.saveAnnIndex(emb, dir, m, cells, dim)
-      val margin = spark.read.parquet(s"$dir/meta")
-        .collect()(0).getAs[Double]("margin")
+      val margin = AnnIndex.readMeta(spark, dir).margin
       val probes = emb.filter(col("vec_id") % 37 === 0)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
 
@@ -141,8 +140,7 @@ object AnnCalib {
           .distinct.map { cells =>
             val dir = s"target/scale/ann_shape_${label}_c$cells"
             graft.queries.SimOps.saveAnnIndex(emb, dir, m, cells, dim)
-            val margin = spark.read.parquet(s"$dir/meta")
-              .collect()(0).getAs[Double]("margin")
+            val margin = AnnIndex.readMeta(spark, dir).margin
             val (np, rr) = AnnBudget.forIndex(spark, dir, topK)
             val rec = graft.queries.SimOps.indexEval(spark, dir, probes,
               m, dim, np, rr, topK).collect()(0).getAs[Double]("recall_at_k")

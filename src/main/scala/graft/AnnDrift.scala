@@ -83,7 +83,7 @@ object AnnDrift {
         (d1, dk)
       }
 
-    import graft.operators.AnnBudget
+    import graft.operators.{AnnBudget, AnnIndex}
     val dim = 64; val topK = 5
     val m = AnnBudget.buildSegments(dim)
     def embOf(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -141,7 +141,7 @@ object AnnDrift {
     val retrainDir = s"target/scale/ann_retrain_${geom}_x$k"
     graft.queries.SimOps.saveAnnIndexMarginGuided(embK, retrainDir, m,
       AnnBudget.buildCells(embK.count()), dim)
-    val retrainMeta = spark.read.parquet(s"$retrainDir/meta").collect()(0)
+    val retrainMeta = AnnIndex.readMeta(spark, retrainDir)
     val (retrained, retNp, retRr) = evalBudgeted(retrainDir, probesK)
 
     // starvation PROBE: fixed literals (nprobe 4 / rerank 50) on the
@@ -173,11 +173,11 @@ object AnnDrift {
       s""""retrained_budget":{"nprobe":$retNp,"rerank":$retRr},""" +
       s""""retrained_shape":{"start_cells":${
         AnnBudget.buildCells(embK.count())},"adopted_cells":${
-        retrainMeta.getAs[Int]("cells")},"margin":${
-        f"${retrainMeta.getAs[Double]("margin")}%.6f"},"served_clustered":${
-        AnnBudget.clustered(retrainMeta.getAs[Double]("margin"))}},""" +
+        retrainMeta.cells},"margin":${
+        f"${retrainMeta.margin}%.6f"},"served_clustered":${
+        AnnBudget.clustered(retrainMeta.margin)}},""" +
       f""""retrained_cost_proxy":${embK.count().toDouble * retNp /
-        retrainMeta.getAs[Int]("cells") + retRr}%.1f,""" +
+        retrainMeta.cells + retRr}%.1f,""" +
       s""""frozen_at_kx_fixed_literal_starvation_probe":${row(starved)},""" +
       s""""retrain_trigger":"recall_at_k < 0.9 x day0 (${
         0.9 * day0Recall}) or n_probes_below_half > 0",""" +

@@ -2,12 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** ANN SERVING-BUDGET policy (round 18, VERDICT r17 wrong #3 / next
-  * #3): the one place the nprobe/rerank a serve call runs is decided,
-  * replacing the uncalibrated per-call literals (nprobe 4 / rerank 50
-  * — day-0 recall@5 = 0.240, 49/55 probes below half recall,
-  * `tools/anndrift_r17_k10.json`) that round 17's drift harness proved
-  * were never an operating point.
+/** ANN SERVING-BUDGET policy: the one place the nprobe/rerank a serve
+  * call runs is decided. Uncalibrated per-call literals (nprobe 4 /
+  * rerank 50) were never an operating point: the drift harness
+  * measured day-0 recall@5 = 0.240 with 49/55 probes below half
+  * recall (`tools/anndrift_r17_k10.json`).
   *
   * THE POLICY. Declared target: recall@5 ≥ [[TargetRecall]] on the
   * index's own corpus at build time. Two knobs, two rules:
@@ -20,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *    nprobe a build-shape constant; a build that grows cells with
   *    √n keeps the SAME share and gets √n-sublinear serving.
   *  - `rerank` is a FRACTION OF THE CORPUS ([[RerankShare]]) with a
-  *    floor: round 17's drift artifact proved the k×-volume recall
+  *    floor: the drift artifact showed the k×-volume recall
   *    collapse (0.240 → 0.090) was candidate STARVATION — a fixed
   *    rerank serves k× less of the corpus at k× volume — and that
   *    holding the served fraction constant restores day-0-shaped
@@ -51,7 +50,7 @@ object AnnBudget {
     * population ~√n, so serving reads nprobe·√n candidates and the
     * budget stays sublinear as builds grow. (A FIXED cell count makes
     * cell population linear in n and forces rerank to carry the whole
-    * corpus share — the shape the r17 drift artifact caught.) */
+    * corpus share — the shape the drift artifact caught.) */
   def buildCells(n: Long): Int =
     math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
 
@@ -65,7 +64,7 @@ object AnnBudget {
   val TargetRecall = 0.8
 
   /** Fraction of coarse cells probed per query on ISOTROPIC geometry
-    * (calibrated r18). NOT the sweep's cheapest-passing share (0.5 →
+    * (calibrated). NOT the sweep's cheapest-passing share (0.5 →
     * 0.836 at the n = 2,000 calibration corpus): that point has no
     * margin — at the n = 500 spec fixture it reads 0.771, under
     * target. One step up (0.75 → 0.93 at calibration, cost ×1.4)
@@ -89,14 +88,14 @@ object AnnBudget {
   val NprobeShare = 0.75
 
   /** Fraction of the indexed corpus re-ranked exactly per probe on
-    * isotropic geometry (calibrated r18). */
+    * isotropic geometry (calibrated). */
   val RerankShare = 0.05
 
   /** Re-rank floor — below this the topK cut itself starves
     * regardless of corpus size. */
   val RerankFloor = 50
 
-  // ---- geometry-aware regime (round 19, VERDICT r18 wrong #1) ----
+  // ---- geometry-aware regime ----
   // Constants calibrated by graft.AnnCalib's two-geometry sweep
   // (tools/anncalib_r19.json): on the clustered mixture-of-Gaussians
   // fixture with the Lloyd-refined coarse quantizer, the build's mean
@@ -151,40 +150,25 @@ object AnnBudget {
     math.min(Int.MaxValue.toDouble, math.max(floor.toDouble, target)).toInt
   }
 
-  /** The budget for a PERSISTED index at `dir`. Since round 19 the
-    * index's one-row `meta` table carries (n, cells, margin) — the
-    * corpus size (refreshed by the append path) and the geometry the
-    * build measured — so the budget prices the geometry it will
-    * actually serve. Pre-meta indexes fall back to the table-count
-    * path with no margin (isotropic budget — the conservative
-    * direction). This is the k×-scaling rule IN the serve path: as
-    * appends grow the index, every budgeted serve call re-derives
-    * rerank from the corpus it actually faces. */
+  /** The budget for a PERSISTED index at `dir`. The index's one-row
+    * `meta` table carries (n, cells, margin) — the corpus size
+    * (refreshed by the append path) and the geometry the build
+    * measured — so the budget prices the geometry it will actually
+    * serve. This is the k×-scaling rule IN the serve path: as appends
+    * grow the index, every budgeted serve call re-derives rerank from
+    * the corpus it actually faces. An index without `meta` was never
+    * committed and is refused ([[AnnIndex.readMeta]] throws). */
   def forIndex(spark: SparkSession, dir: String,
       topK: Int): (Int, Int) = {
-    val meta =
-      try {
-        val r = spark.read.parquet(s"$dir/meta").collect()(0)
-        Some((r.getAs[Long]("n"), r.getAs[Int]("cells"),
-          r.getAs[Double]("margin")))
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    meta match {
-      case Some((metaN, cells, margin)) =>
-        // Round 20 (ADVICE r19 #3): meta.n can go stale in the UNSAFE
-        // direction — the append path writes meta LAST, so a crash
-        // between its invlists append and the meta rewrite leaves n
-        // under the true corpus and rerank under-budgets (recall below
-        // target). The invlists row count is parquet-footer metadata
-        // (no data scan — the pre-meta path paid it on every serve),
-        // so take the max: staleness can then only OVER-budget, the
-        // designed failure direction.
-        val n = math.max(metaN,
-          spark.read.parquet(s"$dir/invlists").count())
-        (nprobe(cells, Some(margin)), rerank(n, topK, Some(margin)))
-      case None =>
-        val cells = spark.read.parquet(s"$dir/centroids").count().toInt
-        val n = spark.read.parquet(s"$dir/invlists").count()
-        (nprobe(cells), rerank(n, topK))
-    }
+    val meta = AnnIndex.readMeta(spark, dir)
+    // meta.n can go stale in the UNSAFE direction — the append path
+    // writes meta LAST, so a crash between its invlists append and the
+    // meta rewrite leaves n under the true corpus and rerank
+    // under-budgets (recall below target). The invlists row count
+    // reads no column, so take the max: staleness can then only
+    // OVER-budget, the designed failure direction.
+    val n = math.max(meta.n,
+      AnnIndex.read(spark, dir, AnnIndex.Invlists).count())
+    (nprobe(meta.cells, Some(meta.margin)), rerank(n, topK, Some(meta.margin)))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.{AnnBudget, AnnIndex, AnnMeta}
 import graft.queries.SimOps
 
 /** [[SimOps.indexEval]] — the recall-drift report that triggers ANN
@@ -9,7 +10,9 @@ import graft.queries.SimOps
   * recall floor on the fixture, and the degenerate exactness bound
   * (probe every cell + corpus-size rerank ⇒ the served answer IS
   * brute force, so measured recall must be exactly 1 — the same bound
-  * SimilaritySpec proves for the search path itself). */
+  * SimilaritySpec proves for the search path itself). Also the
+  * [[AnnIndex]] on-disk layout the report reads: declared schemas,
+  * a job-free load, and the refusal of an uncommitted index. */
 class IndexEvalSpec extends SparkSuite {
 
   private val m = 4; private val k = 16; private val dim = 64
@@ -45,10 +48,8 @@ class IndexEvalSpec extends SparkSuite {
     (0L until 2000L).map(i => (i, (i % 45).toInt))
       .toDF("vec_id", "cell_id")
       .write.mode("overwrite").parquet(s"$dir/invlists")
-    Seq((100L, dim, 16, 45, 0.107))
-      .toDF("n", "dim", "m", "cells", "margin")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    val (np, rr) = graft.operators.AnnBudget.forIndex(spark, dir, topK = 5)
+    AnnIndex.writeMeta(spark, dir, AnnMeta(100L, dim, 16, 45, 0.107))
+    val (np, rr) = AnnBudget.forIndex(spark, dir, topK = 5)
     assert(np === 34, "isotropic margin: nprobe = ceil(0.75 * 45)")
     // stale meta.n = 100 would floor rerank at 50 (recall starvation,
     // the unsafe direction); the healed budget serves the true corpus
@@ -71,5 +72,69 @@ class IndexEvalSpec extends SparkSuite {
     assert(r.getDouble(1) === 1.0, s"mean recall ${r.getDouble(1)}")
     assert(r.getDouble(2) === 1.0, s"min recall ${r.getDouble(2)}")
     assert(r.getLong(3) === 0L)
+  }
+
+  private def smallIndex(name: String, below: Long): String = {
+    val dir = sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR",
+      "target/fixtures") + s"/sf0.001/$name"
+    SimOps.saveAnnIndex(Tables.embeddings(spark, Sf)
+      .select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") < below), dir, m, k, dim)
+    dir
+  }
+
+  test("index layout: every table's written schema is AnnIndex's " +
+      "declared schema, after a build and after an append") {
+    val dir = smallIndex("ann_layout", 250L)
+    def checkLayout(when: String): Unit =
+      for ((t, declared) <- AnnIndex.schemas) {
+        // simpleString omits nullability: a parquet read makes every
+        // column nullable whatever the writer declared
+        val written = spark.read.parquet(AnnIndex.path(dir, t)).schema
+        assert(written.simpleString === declared.simpleString,
+          s"$t after $when")
+      }
+    assert(AnnIndex.schemas.keySet === Set("centroids", "invlists",
+      "codebooks", "codes", "vectors", "meta"))
+    checkLayout("the build")
+    SimOps.appendToAnnIndex(spark, Tables.embeddings(spark, Sf)
+      .filter(col("vec_id") >= 250L), dir, m, dim)
+    checkLayout("an append")
+    assert(AnnIndex.readMeta(spark, dir).n ===
+      Tables.embeddings(spark, Sf).count())
+  }
+
+  test("AnnIndex.load reads the five tables with no Spark job") {
+    val dir = smallIndex("ann_load", 100L)
+    val (t, loadWork) = SparkWork.measure(spark)(AnnIndex.load(spark, dir))
+    assert(loadWork.jobs === 0)
+    // control: the same five reads without a schema infer it from the
+    // footers, one job each, so the meter does see such reads
+    val (_, rawWork) = SparkWork.measure(spark)(
+      Seq("centroids", "invlists", "codebooks", "codes", "vectors")
+        .map(tbl => spark.read.parquet(s"$dir/$tbl")))
+    assert(rawWork.jobs === 5)
+    assert(t.vectors.count() === 100L)
+  }
+
+  test("an index without meta was never committed: forIndex and " +
+      "appendToAnnIndex refuse it and leave the payload untouched") {
+    val dir = smallIndex("ann_uncommitted", 200L)
+    def counts() = AnnIndex.Payload
+      .map(tbl => tbl -> spark.read.parquet(s"$dir/$tbl").count()).toMap
+    val before = counts()
+    assert(before.values.toSet === Set(200L))
+    // a build interrupted before its last write leaves no meta
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(AnnIndex.path(dir, "meta")))
+    val served = intercept[IllegalStateException](
+      AnnBudget.forIndex(spark, dir, topK = 5))
+    assert(served.getMessage.contains(dir) &&
+      served.getMessage.contains("never committed"), served.getMessage)
+    val appended = intercept[IllegalStateException](
+      SimOps.appendToAnnIndex(spark, Tables.embeddings(spark, Sf)
+        .filter(col("vec_id") >= 200L), dir, m, dim))
+    assert(appended.getMessage.contains(dir), appended.getMessage)
+    assert(counts() === before)
   }
 }

@@ -612,8 +612,7 @@ class SimilaritySpec extends SparkSuite {
     val dir = sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR",
       "/root/repo/target/fixtures") + "/sf0.001/ann_margin_guided"
     SimOps.saveAnnIndexMarginGuided(emb, dir, m = 16, k = 128, dim = 64)
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-    assert(meta.getAs[Int]("cells") === cells)
+    assert(graft.operators.AnnIndex.readMeta(spark, dir).cells === cells)
     val (np, rr) = AnnBudget.forIndex(spark, dir, topK = 5)
     assert(np === AnnBudget.ClusteredNprobe,
       s"persisted index must serve the O(1)-cell budget, got nprobe $np")
