@@ -151,22 +151,21 @@ object AnnBudget {
   }
 
   /** The budget for a PERSISTED index at `dir`. The index's one-row
-    * `meta` table carries (n, cells, margin) — the corpus size
-    * (refreshed by the append path) and the geometry the build
-    * measured — so the budget prices the geometry it will actually
-    * serve. This is the k×-scaling rule IN the serve path: as appends
+    * `meta` table carries (cells, margin), the geometry the build
+    * measured, so the budget prices the geometry it will actually
+    * serve; the corpus size is the invlists row count, which appends
+    * grow. This is the k×-scaling rule IN the serve path: as appends
     * grow the index, every budgeted serve call re-derives rerank from
     * the corpus it actually faces. An index without `meta` was never
     * committed and is refused ([[AnnIndex.readMeta]] throws). */
   def forIndex(spark: SparkSession, dir: String,
       topK: Int): (Int, Int) = {
     val meta = AnnIndex.readMeta(spark, dir)
-    // meta.n can go stale in the UNSAFE direction — the append path
-    // writes meta LAST, so a crash between its invlists append and the
-    // meta rewrite leaves n under the true corpus and rerank
-    // under-budgets (recall below target). The invlists row count
-    // reads no column, so take the max: staleness can then only
-    // OVER-budget, the designed failure direction.
+    // meta is written once per build, so after an append meta.n is
+    // under the true corpus and would under-budget rerank (recall
+    // below target). The invlists row count reads no column and counts
+    // every appended vector, so take the max: a budget input can then
+    // only OVER-budget, the designed failure direction.
     val n = math.max(meta.n,
       AnnIndex.read(spark, dir, AnnIndex.Invlists).count())
     (nprobe(meta.cells, Some(meta.margin)), rerank(n, topK, Some(meta.margin)))

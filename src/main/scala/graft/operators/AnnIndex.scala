@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** The one row of an index's `meta` table: corpus size, vector
-  * dimension, PQ segment count, coarse cell count and the build's
-  * measured coarse-assignment margin. */
+/** The one row of an index's `meta` table, as the build measured it:
+  * corpus size, vector dimension, PQ segment count, coarse cell count
+  * and coarse-assignment margin. */
 final case class AnnMeta(n: Long, dim: Int, m: Int, cells: Int, margin: Double)
 
 /** The five tables an IVF×PQ index serves from. A build holds them
@@ -20,9 +20,11 @@ final case class AnnTables(centroids: DataFrame, invlists: DataFrame,
   * table under the index directory, each with a declared schema, so a
   * reload runs no footer-inference job.
   *
-  * `meta` is the commit marker: a build writes it after every other
-  * table, so an index without it was never committed. [[readMeta]]
-  * refuses such an index instead of serving or extending it. */
+  * `meta` is the commit marker and is written once per build: a build
+  * removes it before rewriting any table and writes it after every
+  * other table; appends never touch it. So an index without a `meta`
+  * row was never committed, and [[readMeta]] refuses it instead of
+  * serving or extending it. */
 object AnnIndex {
 
   val Centroids = "centroids"
@@ -60,18 +62,34 @@ object AnnIndex {
       read(spark, dir, Codebooks), read(spark, dir, Codes),
       read(spark, dir, Vectors))
 
-  /** The committed index's meta row. Throws, naming `dir`, when the
-    * index has no `meta`: its build never finished. */
-  def readMeta(spark: SparkSession, dir: String): AnnMeta = {
+  private def metaPath(spark: SparkSession, dir: String) = {
     val p = new Path(path(dir, Meta))
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      throw new IllegalStateException(s"ANN index $dir has no $Meta table: " +
-        "its build never committed (meta is written last), so it can be " +
-        "neither served nor appended to")
-    read(spark, dir, Meta).as(Encoders.product[AnnMeta]).collect().head
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Writes `meta` as one single-file row, replacing any previous one. */
+  /** The committed index's meta row. Throws, naming `dir`, when the
+    * index has no `meta` row: no `meta` directory, or one a crashed
+    * write left holding only `_temporary`. Either way its build never
+    * finished. */
+  def readMeta(spark: SparkSession, dir: String): AnnMeta = {
+    val (fs, p) = metaPath(spark, dir)
+    val rows =
+      if (!fs.exists(p)) Array.empty[AnnMeta]
+      else read(spark, dir, Meta).as(Encoders.product[AnnMeta]).collect()
+    rows.headOption.getOrElse(throw new IllegalStateException(
+      s"ANN index $dir has no $Meta row: its build never committed " +
+        "(meta is written last), so it can be neither served nor " +
+        "appended to"))
+  }
+
+  /** Removes `meta`, so the index reads as uncommitted until the next
+    * [[writeMeta]]. A build calls it before rewriting any table. */
+  def uncommit(spark: SparkSession, dir: String): Unit = {
+    val (fs, p) = metaPath(spark, dir)
+    fs.delete(p, true): Unit
+  }
+
+  /** Writes `meta` as one single-file row: a build's last write. */
   def writeMeta(spark: SparkSession, dir: String, meta: AnnMeta): Unit =
     spark.createDataset(Seq(meta))(Encoders.product[AnnMeta])
       .coalesce(1).write.mode("overwrite").parquet(path(dir, Meta))

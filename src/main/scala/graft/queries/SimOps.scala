@@ -557,8 +557,8 @@ object SimOps extends QueryPack {
     * parquet bit-exactly, so a search against the reloaded index equals
     * the in-session search (SimilaritySpec).
     *
-    * `meta` carries (n, dim, m, cells, margin): corpus size and the
-    * [[coarseMargin]] geometry statistic, so
+    * `meta` carries (n, dim, m, cells, margin): the build's corpus
+    * size and the [[coarseMargin]] geometry statistic, so
     * [[graft.operators.AnnBudget.forIndex]] derives the serving
     * budget from what the build MEASURED instead of assuming the
     * adversarial geometry.
@@ -753,8 +753,9 @@ object SimOps extends QueryPack {
     * path) feeds only the final meta row. Each chain's plan — and so
     * each table's bytes — is what a sequential build writes
     * (SimilaritySpec's reload-parity and IndexEvalSpec pin the
-    * outputs). meta stays the LAST write, ordered after every sibling,
-    * so an interrupted build leaves no (or the old) meta.
+    * outputs). An earlier build's meta is removed before any table is
+    * rewritten, and meta stays the LAST write, ordered after every
+    * sibling, so an interrupted build leaves no meta.
     *
     * `n`: callers that already counted the corpus (every registry
     * build row counts it for buildCells) pass it through; the
@@ -773,6 +774,8 @@ object SimOps extends QueryPack {
       n: Long = -1L): Unit = {
     def write(df: DataFrame, table: String): Unit =
       df.write.mode("overwrite").parquet(AnnIndex.path(dir, table))
+    val spark = emb.sparkSession
+    AnnIndex.uncommit(spark, dir)
     val (mg, _, _, _) = graft.operators.Concur.par(
       margin,
       {
@@ -788,7 +791,6 @@ object SimOps extends QueryPack {
         write(pqEncode(emb, codebooks, m, dim), AnnIndex.Codes)
       },
       write(emb.select(col("vec_id"), col("embedding")), AnnIndex.Vectors))
-    val spark = emb.sparkSession
     val nOut =
       if (n >= 0L) n else AnnIndex.read(spark, dir, AnnIndex.Invlists).count()
     AnnIndex.writeMeta(spark, dir, AnnMeta(nOut, dim, m, cells, mg))
@@ -897,9 +899,14 @@ object SimOps extends QueryPack {
     * inside the append would silently re-bucket every historical code
     * — recall drift is a retrain decision, not an ingest side effect.
     *
-    * An index without `meta` was never committed, so the append
-    * refuses it ([[AnnIndex.readMeta]] throws) before writing
-    * anything.
+    * `meta` is never rewritten: it keeps the build's measurements,
+    * including the MARGIN (the quantizers are frozen, and whether
+    * appended vectors have drifted off the build geometry is
+    * AnnDrift's retrain decision, not a silent re-measure), and
+    * [[graft.operators.AnnBudget.forIndex]] takes the grown corpus
+    * size from the invlists count. An index without `meta` was never
+    * committed, so the append refuses it ([[AnnIndex.readMeta]]
+    * throws) before writing anything.
     *
     * Same wired-in maintenance as the dedup index's refresh
     * ([[graft.queries.TextOps.appendToDedupIndex]]): each appended
@@ -933,7 +940,7 @@ object SimOps extends QueryPack {
       compactAboveFiles: Int = 64, targetBytes: Long = 512L << 20): Unit = {
     import graft.models.ModelStore
     import graft.pipeline.Compaction
-    val meta = AnnIndex.readMeta(spark, dir)
+    AnnIndex.readMeta(spark, dir): Unit // refuses an uncommitted index
     val t = AnnIndex.load(spark, dir)
     // The incoming batch is PINNED once (localCheckpoint): it is read
     // by three append jobs below, and its own lineage may read payload
@@ -965,16 +972,6 @@ object SimOps extends QueryPack {
     AnnIndex.Payload.map(AnnIndex.path(dir, _))
       .filter(d => Compaction.parquetFileCount(spark, d) > compactAboveFiles)
       .foreach(d => Compaction.compact(spark, d, targetBytes): Unit)
-    // refresh meta.n: AnnBudget.forIndex budgets from the meta row, so
-    // the append keeps its corpus size current. The MARGIN stays the
-    // build-time measurement — the quantizers are frozen, and whether
-    // appended vectors have drifted off the build geometry is
-    // AnnDrift's retrain decision, not a silent serve-path re-measure.
-    // A failed refresh propagates so the caller retries it; a crash
-    // between the appends and this refresh is healed on the serve
-    // side, where forIndex budgets from max(meta.n, invlists count).
-    AnnIndex.writeMeta(spark, dir,
-      meta.copy(n = AnnIndex.read(spark, dir, AnnIndex.Invlists).count()))
   }
 
   /** Recall-drift observability for a persisted [[saveAnnIndex]]

@@ -12,7 +12,8 @@ import graft.queries.SimOps
   * brute force, so measured recall must be exactly 1 — the same bound
   * SimilaritySpec proves for the search path itself). Also the
   * [[AnnIndex]] on-disk layout the report reads: declared schemas,
-  * a job-free load, and the refusal of an uncommitted index. */
+  * a job-free load, a write-once meta, and the refusal of an
+  * uncommitted index. */
 class IndexEvalSpec extends SparkSuite {
 
   private val m = 4; private val k = 16; private val dim = 64
@@ -43,8 +44,8 @@ class IndexEvalSpec extends SparkSuite {
     import spark.implicits._
     val dir = sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR",
       "/root/repo/target/fixtures") + "/sf0.001/ann_stale_meta"
-    // an append landed 2000 invlists rows but crashed before the meta
-    // refresh: meta.n still reads the pre-append 100
+    // appends landed 2000 invlists rows; meta, written once by the
+    // build, still reads the build's 100
     (0L until 2000L).map(i => (i, (i % 45).toInt))
       .toDF("vec_id", "cell_id")
       .write.mode("overwrite").parquet(s"$dir/invlists")
@@ -97,11 +98,24 @@ class IndexEvalSpec extends SparkSuite {
     assert(AnnIndex.schemas.keySet === Set("centroids", "invlists",
       "codebooks", "codes", "vectors", "meta"))
     checkLayout("the build")
-    SimOps.appendToAnnIndex(spark, Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") >= 250L), dir, m, dim)
+    val built = AnnIndex.readMeta(spark, dir)
+    // the rest of the fixture plus three id-shifted copies of it: the
+    // grown corpus is large enough that its rerank budget differs
+    // from the build's in either margin regime
+    val emb = Tables.embeddings(spark, Sf)
+      .select(col("vec_id"), col("embedding"))
+    val grown = (1 to 3).map(c => emb.select((col("vec_id") + c * 1000L)
+        .as("vec_id"), col("embedding")))
+      .foldLeft(emb.filter(col("vec_id") >= 250L))(_ union _)
+    SimOps.appendToAnnIndex(spark, grown, dir, m, dim)
     checkLayout("an append")
-    assert(AnnIndex.readMeta(spark, dir).n ===
-      Tables.embeddings(spark, Sf).count())
+    assert(AnnIndex.readMeta(spark, dir) === built,
+      "meta is written once, by the build")
+    val total = 250L + grown.count()
+    val (_, rr) = AnnBudget.forIndex(spark, dir, topK = 5)
+    assert(rr === AnnBudget.rerank(total, 5, Some(built.margin)),
+      s"rerank must budget the grown $total-vector corpus, got $rr")
+    assert(rr > AnnBudget.rerank(built.n, 5, Some(built.margin)))
   }
 
   test("AnnIndex.load reads the five tables with no Spark job") {
@@ -113,7 +127,7 @@ class IndexEvalSpec extends SparkSuite {
     val (_, rawWork) = SparkWork.measure(spark)(
       Seq("centroids", "invlists", "codebooks", "codes", "vectors")
         .map(tbl => spark.read.parquet(s"$dir/$tbl")))
-    assert(rawWork.jobs === 5)
+    assert(rawWork.jobs > 0)
     assert(t.vectors.count() === 100L)
   }
 
@@ -124,17 +138,49 @@ class IndexEvalSpec extends SparkSuite {
       .map(tbl => tbl -> spark.read.parquet(s"$dir/$tbl").count()).toMap
     val before = counts()
     assert(before.values.toSet === Set(200L))
+    val metaDir = new java.io.File(AnnIndex.path(dir, "meta"))
+    def assertRefused(state: String): Unit = {
+      val served = intercept[IllegalStateException](
+        AnnBudget.forIndex(spark, dir, topK = 5))
+      assert(served.getMessage.contains(dir) &&
+        served.getMessage.contains("never committed"),
+        s"$state: ${served.getMessage}")
+      val appended = intercept[IllegalStateException](
+        SimOps.appendToAnnIndex(spark, Tables.embeddings(spark, Sf)
+          .filter(col("vec_id") >= 200L), dir, m, dim))
+      assert(appended.getMessage.contains(dir), s"$state: ${appended.getMessage}")
+      assert(counts() === before, state)
+    }
     // a build interrupted before its last write leaves no meta
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(AnnIndex.path(dir, "meta")))
-    val served = intercept[IllegalStateException](
-      AnnBudget.forIndex(spark, dir, topK = 5))
-    assert(served.getMessage.contains(dir) &&
-      served.getMessage.contains("never committed"), served.getMessage)
-    val appended = intercept[IllegalStateException](
-      SimOps.appendToAnnIndex(spark, Tables.embeddings(spark, Sf)
-        .filter(col("vec_id") >= 200L), dir, m, dim))
-    assert(appended.getMessage.contains(dir), appended.getMessage)
-    assert(counts() === before)
+    org.apache.commons.io.FileUtils.deleteDirectory(metaDir)
+    assertRefused("no meta directory")
+    // one interrupted inside that write leaves the row under _temporary
+    AnnIndex.writeMeta(spark, s"$dir/meta/_temporary/0",
+      AnnMeta(200L, dim, m, k, 0.1))
+    assert(metaDir.list().toSeq === Seq("_temporary"))
+    assertRefused("meta holding only _temporary")
+  }
+
+  test("a rebuild that fails leaves the index uncommitted, not the old " +
+      "meta over a torn layout") {
+    val dir = new java.io.File(smallIndex("ann_failed_rebuild", 200L))
+      .getAbsolutePath
+    assert(AnnIndex.readMeta(spark, dir).n === 200L)
+    // the rebuild's overwrite of `vectors` cannot clear the old table,
+    // so that write fails after others have already replaced theirs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.nodelete.impl", classOf[NoDeleteFs].getName)
+    NoDeleteFs.refuses = _ == AnnIndex.path(dir, "vectors")
+    val failed =
+      try intercept[Exception](SimOps.saveAnnIndex(
+          Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding")),
+          s"nodelete://$dir", m, k, dim))
+      finally NoDeleteFs.refuses = _ => false
+    val causes = Iterator.iterate[Throwable](failed)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
+    assert(causes.contains(s"$dir/vectors"), causes)
+    val refused = intercept[IllegalStateException](
+      AnnIndex.readMeta(spark, dir))
+    assert(refused.getMessage.contains("never committed"), refused.getMessage)
   }
 }
