@@ -49,11 +49,9 @@ object AnnCalib {
     AnnGeom.synthesize(spark, "target/scale/mog1", 2000L)
     val dim = 64; val topK = 5
 
-    def embOf(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
     val geoms = Seq(
-      ("isotropic", embOf(oneDir)),
-      ("clustered", embOf("target/scale/mog1")))
+      ("isotropic", AnnDrift.embOf(spark, oneDir)),
+      ("clustered", AnnDrift.embOf(spark, "target/scale/mog1")))
 
     val target = AnnBudget.TargetRecall
     val geomDocs = if (!sections("grid")) Nil else geoms.map { case (label, emb) =>

@@ -63,6 +63,14 @@ import org.apache.spark.sql.functions._
   */
 object AnnDrift {
 
+  /** A synthesized corpus's (vec_id, embedding) rows, read with the ANN
+    * index's `vectors` schema: no footer-inference job, and a `label`
+    * column, where the corpus has one, is not read. */
+  def embOf(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    spark.read.schema(graft.operators.AnnIndex.schemas(
+      graft.operators.AnnIndex.Vectors)).parquet(s"$dir/embeddings.parquet")
+
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
@@ -86,10 +94,8 @@ object AnnDrift {
     import graft.operators.{AnnBudget, AnnIndex}
     val dim = 64; val topK = 5
     val m = AnnBudget.buildSegments(dim)
-    def embOf(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val emb1 = embOf(oneDir)
-    val embK = embOf(kDir)
+    val emb1 = embOf(spark, oneDir)
+    val embK = embOf(spark, kDir)
     val n1 = emb1.count()
     val cells1 = AnnBudget.buildCells(n1)
 

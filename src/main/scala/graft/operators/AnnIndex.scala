@@ -34,9 +34,6 @@ object AnnIndex {
   val Vectors = "vectors"
   val Meta = "meta"
 
-  /** The tables an append extends; the quantizer tables stay frozen. */
-  val Payload: Seq[String] = Seq(Invlists, Codes, Vectors)
-
   /** Each table's schema, as the build writes it. */
   val schemas: Map[String, StructType] = Map(
     Centroids -> "cell_id bigint, centroid array<float>",

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Small-file compaction for warehouse table directories.
   *
@@ -11,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   * explosion and NameNode/listing pressure dominate read cost.
   * `compact` rewrites a LEAF table directory into
   * ceil(totalBytes / targetBytes) files via one distributed
-  * repartition. For a partitioned layout, run it per partition
-  * directory so the directory-encoded column survives.
+  * repartition, reading the table with the schema its caller declares
+  * (no footer-inference job; a column the schema omits is dropped).
+  * For a partitioned layout, run it per partition directory so the
+  * directory-encoded column survives.
   *
   * The tmp-write → delete → rename swap is not atomic (same window the
   * sink's load/checkpoint sequence has); a crash between delete and
@@ -26,9 +29,8 @@ import org.apache.spark.sql.SparkSession
 object Compaction {
 
   /** Count of parquet leaf files under `dir` (recursive) — the
-    * fragmentation measure append-table maintenance policies gate on
-    * (e.g. the dedup-index refresh loop compacts only past a file-count
-    * threshold, so steady-state epochs pay a listing, not a rewrite). */
+    * fragmentation measure [[appendThenCompact]] gates on, so
+    * steady-state epochs pay a listing, not a rewrite. */
   def parquetFileCount(spark: SparkSession, dir: String): Int = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -41,7 +43,8 @@ object Compaction {
     n
   }
 
-  def compact(spark: SparkSession, dir: String, targetBytes: Long): Int = {
+  def compact(spark: SparkSession, dir: String, schema: StructType,
+      targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -62,7 +65,7 @@ object Compaction {
     if (nFiles <= targetParts) return 0
 
     val tmp = new Path(dir + ".compact-tmp")
-    spark.read.parquet(dir)
+    spark.read.schema(schema).parquet(dir)
       .repartition(targetParts)
       .write.mode("overwrite").parquet(tmp.toString)
     // a rename onto a directory that still exists would move the
@@ -74,5 +77,27 @@ object Compaction {
       throw new java.io.IOException(
         s"compaction rename failed; compacted data is at $tmp")
     targetParts
+  }
+
+  /** The refresh step of an append-only table family (the dedup
+    * survivor index, an ANN index's payload tables): append each
+    * (directory, schema, rows) table, then [[compact]] each one past
+    * `compactAboveFiles` parquet files with its schema; below that a
+    * table costs one listing. Compaction deletes the files it
+    * replaces, so `beforeDelete` runs once before the first compaction,
+    * only when one is due, to pin any frame whose lineage reads them.
+    * Returns its result, or None when nothing was compacted. */
+  def appendThenCompact[T](tables: Seq[(String, StructType, DataFrame)],
+      compactAboveFiles: Int, targetBytes: Long)(beforeDelete: => T): Option[T] = {
+    tables.foreach { case (dir, _, df) => df.write.mode("append").parquet(dir) }
+    val due = tables.filter { case (dir, _, df) =>
+      parquetFileCount(df.sparkSession, dir) > compactAboveFiles }
+    if (due.isEmpty) None
+    else {
+      val pinned = beforeDelete
+      due.foreach { case (dir, schema, df) =>
+        compact(df.sparkSession, dir, schema, targetBytes): Unit }
+      Some(pinned)
+    }
   }
 }

@@ -908,21 +908,19 @@ object SimOps extends QueryPack {
     * committed, so the append refuses it ([[AnnIndex.readMeta]]
     * throws) before writing anything.
     *
-    * Same wired-in maintenance as the dedup index's refresh
-    * ([[graft.queries.TextOps.appendToDedupIndex]]): each appended
-    * batch adds files, and past `compactAboveFiles` a payload table is
-    * compacted in place (pipeline.Compaction), keeping probe task
-    * count flat across epochs. Safe under the sequential-refresh
-    * assumption; concurrent-reader deployments pass Int.MaxValue and
-    * schedule compaction in a maintenance window. The appended frames
-    * are fully written before compaction runs and the quantizer
-    * tables are untouched, so `newVecs` lineage is only at risk if it
-    * itself reads the PAYLOAD tables — checkpoint it first in that
-    * (unusual: payload-derived vectors) case.
+    * Same wired-in maintenance as the dedup index's refresh, one
+    * shared body ([[graft.pipeline.Compaction.appendThenCompact]]):
+    * past `compactAboveFiles` files a payload table is compacted in
+    * place, read with its [[AnnIndex]] schema. Safe under the
+    * sequential-refresh assumption; concurrent-reader deployments pass
+    * Int.MaxValue and schedule compaction in a maintenance window.
+    * The batch and each table's fresh rows are pinned before any
+    * append, and compaction runs after every append, so no live
+    * lineage reads a file the compaction deletes.
     *
     * Idempotent under micro-batch REPLAY, PER PAYLOAD TABLE: each of
-    * invlists / codes / vectors drops ids it already holds immediately
-    * before its own append (see the in-method comment), so a
+    * invlists / codes / vectors drops ids it already holds from its
+    * own append (see the in-method comment), so a
     * foreachBatch loop replaying an uncommitted micro-batch after a
     * crash (Structured Streaming's at-least-once contract for
     * foreachBatch side effects) gets exactly-once payload semantics
@@ -938,8 +936,6 @@ object SimOps extends QueryPack {
   def appendToAnnIndex(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, dir: String, m: Int, dim: Int,
       compactAboveFiles: Int = 64, targetBytes: Long = 512L << 20): Unit = {
-    import graft.models.ModelStore
-    import graft.pipeline.Compaction
     AnnIndex.readMeta(spark, dir): Unit // refuses an uncommitted index
     val t = AnnIndex.load(spark, dir)
     // The incoming batch is PINNED once (localCheckpoint): it is read
@@ -949,29 +945,27 @@ object SimOps extends QueryPack {
     val batch = newVecs.select(col("vec_id"), col("embedding"))
       .localCheckpoint()
     // IDEMPOTENT per table: ids already present in THIS table anti-join
-    // away right before THIS table's append. Each probe reads one
+    // away from THIS table's append. Each probe reads one
     // column of one payload table (corpus-sublinear, the dedup-index
     // refresh's cost class) — three probes per batch, not one global
     // invlists probe: a global probe makes a partially-appended batch
     // (crash between appends) unrepairable, because the replay
     // anti-joins away entirely and codes/vectors never receive the
     // rows. Each table's file listing was taken by the load above,
-    // before any append; each filtered frame is pinned before its
-    // append because its lineage reads the very table the append
-    // writes (the self-read hazard), which makes the
+    // before any append; each filtered frame is pinned as it is built,
+    // before any append, because its lineage reads the very table an
+    // append writes (the self-read hazard), which makes the
     // read-before-write ordering explicit rather than incidental.
     def freshFor(existing: DataFrame): DataFrame =
       batch.join(existing.select(col("vec_id").as("__existing")),
           col("vec_id") === col("__existing"), "left_anti")
         .localCheckpoint()
-    def append(df: DataFrame, table: String): Unit =
-      ModelStore.appendLargeTable(df, AnnIndex.path(dir, table))
-    append(assignCellIds(freshFor(t.invlists), t.centroids), AnnIndex.Invlists)
-    append(pqEncode(freshFor(t.codes), t.codebooks, m, dim), AnnIndex.Codes)
-    append(freshFor(t.vectors), AnnIndex.Vectors)
-    AnnIndex.Payload.map(AnnIndex.path(dir, _))
-      .filter(d => Compaction.parquetFileCount(spark, d) > compactAboveFiles)
-      .foreach(d => Compaction.compact(spark, d, targetBytes): Unit)
+    graft.pipeline.Compaction.appendThenCompact(Seq(
+        AnnIndex.Invlists -> assignCellIds(freshFor(t.invlists), t.centroids),
+        AnnIndex.Codes -> pqEncode(freshFor(t.codes), t.codebooks, m, dim),
+        AnnIndex.Vectors -> freshFor(t.vectors)
+      ).map { case (tb, df) => (AnnIndex.path(dir, tb), AnnIndex.schemas(tb), df) },
+      compactAboveFiles, targetBytes)(()): Unit
   }
 
   /** Recall-drift observability for a persisted [[saveAnnIndex]]

@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.functions._
 
+import graft.operators.DedupIndex
 import graft.pipeline.Compaction
 
 /** A local filesystem whose `delete` of a chosen path reports failure
@@ -29,7 +30,8 @@ object NoDeleteFs {
   @volatile var refuses: String => Boolean = _ => false
 }
 
-/** Compaction must reduce file count without changing data, and be a
+/** Compaction must reduce file count without changing data or inferring
+  * a schema (it reads with the caller's), and be a
   * no-op when the directory is already compact. */
 class CompactionSpec extends SparkSuite {
 
@@ -38,37 +40,49 @@ class CompactionSpec extends SparkSuite {
       .filter(_.getName.endsWith(".parquet")).toSeq
 
   test("compacts a fragmented table, preserving rows and schema") {
-    val dir = "target/test-fixtures/compact/orders"
-    val src = Tables.orders(spark, Sf)
-    src.repartition(16).write.mode("overwrite").parquet(dir)
-    assert(parquetFiles(dir).size == 16)
-    val before = spark.read.parquet(dir)
-    val beforeCount = before.count()
-    val beforeSum = before.agg(sum(col("o_orderkey"))).collect().head.getLong(0)
+    val orders = Tables.orders(spark, Sf)
+    val docs = Tables.documents(spark, Sf)
+      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
+    // a flat fixture table, and an index table with an array column
+    // compacted with its owner's declared schema
+    for ((name, src, schema) <- Seq(
+        ("orders", orders, orders.schema),
+        ("features", docs, DedupIndex.schemas(DedupIndex.Features)))) {
+      val dir = s"target/test-fixtures/compact/$name"
+      src.repartition(16).write.mode("overwrite").parquet(dir)
+      assert(parquetFiles(dir).size == 16)
+      val before = spark.read.parquet(dir)
+      val beforeRows = before.collect().map(_.toString).sorted.toSeq
 
-    val n = Compaction.compact(spark, dir, targetBytes = 1L << 30)
-    assert(n == 1, s"expected 1 output file, got $n")
-    assert(parquetFiles(dir).size == 1)
-    val after = spark.read.parquet(dir)
-    assert(after.count() == beforeCount)
-    assert(after.agg(sum(col("o_orderkey"))).collect().head.getLong(0) == beforeSum)
-    assert(after.schema == before.schema)
+      val (n, work) = SparkWork.measure(spark)(
+        Compaction.compact(spark, dir, schema, targetBytes = 1L << 30))
+      assert(n == 1, s"$name: expected 1 output file, got $n")
+      assert(!work.jobStageNames.flatten.exists(_.startsWith("parquet at")),
+        s"$name: compaction inferred a schema: ${work.jobStageNames}")
+      assert(parquetFiles(dir).size == 1)
+      val after = spark.read.parquet(dir)
+      assert(after.collect().map(_.toString).sorted.toSeq == beforeRows, name)
+      assert(after.schema == before.schema, name)
 
-    // already compact → no-op
-    assert(Compaction.compact(spark, dir, targetBytes = 1L << 30) == 0)
-    assert(parquetFiles(dir).size == 1)
+      // already compact → no-op
+      assert(Compaction.compact(spark, dir, schema, targetBytes = 1L << 30) == 0)
+      assert(parquetFiles(dir).size == 1)
+    }
   }
 
   test("missing directory is a no-op") {
-    assert(Compaction.compact(spark, "target/test-fixtures/compact/nope", 1024) == 0)
+    assert(Compaction.compact(spark, "target/test-fixtures/compact/nope",
+      Tables.orders(spark, Sf).schema, 1024) == 0)
   }
 
   test("target size bounds the output file count from below") {
     val dir = "target/test-fixtures/compact/lineitem"
-    Tables.lineitem(spark, Sf).repartition(12).write.mode("overwrite").parquet(dir)
+    val lineitem = Tables.lineitem(spark, Sf)
+    lineitem.repartition(12).write.mode("overwrite").parquet(dir)
     val totalBytes = parquetFiles(dir).map(_.length()).sum
     // target of ~1/3 the data → at least 3 files, far fewer than 12
-    val n = Compaction.compact(spark, dir, targetBytes = totalBytes / 3)
+    val n = Compaction.compact(spark, dir, lineitem.schema,
+      targetBytes = totalBytes / 3)
     assert(n >= 3 && n < 12, s"got $n files")
     assert(parquetFiles(dir).size == n)
   }
@@ -78,12 +92,14 @@ class CompactionSpec extends SparkSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nodelete.impl", classOf[NoDeleteFs].getName)
     val dir = new File("target/test-fixtures/compact/nodelete").getAbsolutePath
-    Tables.orders(spark, Sf).repartition(8).write.mode("overwrite").parquet(dir)
+    val orders = Tables.orders(spark, Sf)
+    orders.repartition(8).write.mode("overwrite").parquet(dir)
     val rows = spark.read.parquet(dir).count()
     NoDeleteFs.refuses = _ == dir
     val e =
       try intercept[java.io.IOException] {
-        Compaction.compact(spark, s"nodelete://$dir", targetBytes = 1L << 30)
+        Compaction.compact(spark, s"nodelete://$dir", orders.schema,
+          targetBytes = 1L << 30)
       } finally NoDeleteFs.refuses = _ => false
     assert(e.getMessage.contains(s"$dir.compact-tmp"), e.getMessage)
     // a rename onto the surviving directory would have moved the

@@ -115,5 +115,16 @@ class HtmlExtractSpec extends SparkSuite {
       .join(st.select(col("doc_id"), col("text_clean").as("stripped")),
         Seq("doc_id"))
     assert(joined.filter(col("flat") =!= col("stripped")).count() === 0L)
+    // each key's page archive has the declared schema, and once it
+    // is written the query reads it back with no Spark job
+    for (q <- Seq("q_text_html_strip", "q_text_html_extract",
+        "q_text_html_links")) {
+      val page = SparkEntry.queries(q)(spark, sf).inputFiles.head
+      val archive = new org.apache.hadoop.fs.Path(page).getParent.toString
+      assert(spark.read.parquet(archive).schema.simpleString ===
+        graft.queries.TextOps.PagesSchema.simpleString, q)
+      val (_, work) = SparkWork.measure(spark)(SparkEntry.queries(q)(spark, sf))
+      assert(work.jobs === 0, s"$q: ${work.jobStageNames}")
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.DedupIndex
 import graft.queries.TextOps
 
 /** Incremental dedup against a persisted survivor index
@@ -19,6 +20,13 @@ class IncrementalDedupSpec extends SparkSuite {
     val docs = Tables.documents(spark, Sf)
     val inc = TextOps.dedupIncremental(spark, docs, dir("idx_fixture"), 0.5)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    // the persisted index is DedupIndex's layout, loaded with no job
+    for ((t, declared) <- DedupIndex.schemas)
+      assert(spark.read.parquet(DedupIndex.path(dir("idx_fixture"), t))
+        .schema.simpleString === declared.simpleString, t)
+    val (_, load) = SparkWork.measure(spark)(
+      DedupIndex.load(spark, dir("idx_fixture")))
+    assert(load.jobs === 0, load.jobStageNames)
     val full = TextOps.minhashDedupSurvivors(docs, 0.5)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(inc === full)

@@ -134,7 +134,7 @@ class IndexEvalSpec extends SparkSuite {
   test("an index without meta was never committed: forIndex and " +
       "appendToAnnIndex refuse it and leave the payload untouched") {
     val dir = smallIndex("ann_uncommitted", 200L)
-    def counts() = AnnIndex.Payload
+    def counts() = Seq(AnnIndex.Invlists, AnnIndex.Codes, AnnIndex.Vectors)
       .map(tbl => tbl -> spark.read.parquet(s"$dir/$tbl").count()).toMap
     val before = counts()
     assert(before.values.toSet === Set(200L))

@@ -314,6 +314,10 @@ class StreamingIngestSpec extends SparkSuite {
       Seq(doc(100L)).toDF(), idxDir, 0.5)
     assert(lateDup.count() == 0,
       "compaction lost index rows — early-epoch survivor no longer matches")
+    // appends and compactions keep each table's declared schema
+    for ((t, declared) <- graft.operators.DedupIndex.schemas)
+      assert(spark.read.parquet(s"$idxDir/$t").schema.simpleString ===
+        declared.simpleString, t)
   }
 
   test("appendToDedupIndex returns a survivors frame that survives a " +
@@ -616,7 +620,6 @@ class StreamingIngestSpec extends SparkSuite {
       "the invlists write and the codes/vectors writes)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    import graft.models.ModelStore
     import graft.queries.SimOps
     val m = 4; val k = 16; val dim = 64
     val idxDir = s"$root/ann_partial_index"
@@ -630,9 +633,8 @@ class StreamingIngestSpec extends SparkSuite {
     // BEFORE codes/vectors — reproduce by performing only the first of
     // the three table writes appendToAnnIndex would have done.
     val centroids = spark.read.parquet(s"$idxDir/centroids")
-    ModelStore.appendLargeTable(
-      SimOps.assignCells(batch, centroids).select(col("vec_id"), col("cell_id")),
-      s"$idxDir/invlists")
+    SimOps.assignCells(batch, centroids).select(col("vec_id"), col("cell_id"))
+      .write.mode("append").parquet(s"$idxDir/invlists")
     def counts() = Seq("invlists", "codes", "vectors")
       .map(t => t -> spark.read.parquet(s"$idxDir/$t").count()).toMap
     val torn = counts()
