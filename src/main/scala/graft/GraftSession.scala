@@ -36,15 +36,12 @@ object GraftSession {
     spark
   }
 
-  // Round 20: an `enumFanout` session clone (newSession +
-  // spark.sql.adaptive.coalescePartitions.enabled=false, scoped to
-  // the three prefix-family pair listers) was built here as the third
-  // candidate fix for the AQE input-byte-coalesced enumeration join
-  // and REVERTED on a 5-run same-box A/B — no win on containment,
-  // a loss on ngram (the coalescing pass is also what splits the hot
-  // buckets; numbers recorded at the q_dedup_prefix registry entry
-  // and in BASELINE.md). The session-clone SCOPING mechanism itself
-  // is sound (builder-level configs are inherited; EntrySpec's
-  // rewrite contract holds in a clone) — reach for it if a future
-  // per-query conf change measures a real win.
+  // Every query runs under the one config above. A per-query conf can
+  // be scoped with a `newSession()` clone: builder-level configs are
+  // inherited, so the GraftExtensions rewrite EntrySpec asserts holds
+  // in a clone too. None is used: turning AQE partition coalescing off
+  // for the prefix-family pair listers measured no win on containment
+  // and a loss on ngram, because the coalescing pass is also what
+  // splits their hot buckets (numbers at the q_dedup_prefix registry
+  // entry and in BASELINE.md).
 }

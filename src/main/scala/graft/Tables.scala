@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.pipeline.DataFiles
+
 /** Table loader for the driver fixtures (TESTDATA.md / FIXTURES.md).
   *
   * All oracle-checked queries load their inputs through here so the
@@ -20,10 +22,15 @@ import org.apache.spark.sql.types._
   *  - Every loaded table is checked against the FIXTURES.md schema
   *    contract ([[contract]]): an unexpected column set or column type
   *    fails AT LOAD with an error naming the table, column, expected and
-  *    found type — not three layers up as an oracle hash mismatch. The
-  *    sandbox has been re-provisioned mid-build once already (round 9:
-  *    regenerated events.parquet switched Parquet timestamp physical
-  *    type), so fixture-generation drift is a real, observed hazard.
+  *    found type — not three layers up as an oracle hash mismatch. A
+  *    regenerated events.parquet has switched its Parquet timestamp
+  *    physical type before, so fixture-generation drift is a real,
+  *    observed hazard.
+  *  - A fixture's schema is inferred from its Parquet footers at most
+  *    once per file set ([[readRaw]]); later loads of the same files
+  *    read with the remembered schema and run no Spark job. A
+  *    regenerated file is a new file set, so it is inferred and checked
+  *    again.
   */
 object Tables {
 
@@ -113,8 +120,8 @@ object Tables {
 
   /** The TimestampType→TimestampNTZType cast reinterprets the instant in
     * the SESSION timezone; anything but UTC silently shifts every value.
-    * Assert instead of trusting that the conf.set safety net survives
-    * future refactors (ADVICE r9). */
+    * Checked on every load, not trusted to the session builders, since a
+    * driver-owned session may load tables without them. */
   private def requireUtcSession(spark: SparkSession, table: String): Unit = {
     val tz = spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
     if (tz != "UTC")
@@ -150,25 +157,62 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (tsColumns.contains(name)) {
-      // Session builders set this too; kept as a safety net for
-      // driver-owned sessions that load tables without our builder.
-      // Every tsColumns table gets it (ADVICE r10): any of them can
-      // regenerate into the TIMESTAMP(NANOS) flavor, and without
-      // nanosAsLong the scan fails with Spark's raw 'Illegal Parquet
-      // type' instead of this loader's named contract error. The
-      // session TIMEZONE is deliberately NOT force-set here: a read
-      // flag only changes how these files parse, but overriding the
-      // session tz would silently re-interpret every timestamp in the
-      // caller's OWN queries — the tz-adjusted flavor instead fails
-      // loudly via requireUtcSession (ADVICE r9) and the caller
-      // chooses UTC, as every entry point in this repo does.
+      // Session builders set this too; kept for driver-owned sessions
+      // that load tables without our builder. Every tsColumns table
+      // gets it: any of them can regenerate into the TIMESTAMP(NANOS)
+      // flavor, and without nanosAsLong the scan fails with Spark's raw
+      // 'Illegal Parquet type' instead of this loader's named contract
+      // error. The session TIMEZONE is deliberately NOT force-set here:
+      // a read flag only changes how these files parse, but overriding
+      // the session tz would silently re-interpret every timestamp in
+      // the caller's OWN queries. The tz-adjusted flavor instead fails
+      // loudly via requireUtcSession and the caller chooses UTC, as
+      // every entry point in this repo does.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = readRaw(spark, s"$sfDir/$name.parquet")
     val normalized = tsColumns.getOrElse(name, Nil).foldLeft(raw) {
       (df, c) => toNtz(spark, df, c, name)
     }
     checkContract(name, normalized)
+  }
+
+  /** Session confs that change the types Parquet schema inference gives
+    * a file's columns, or which files it reads. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (path, data files as (name, length, modification time), values of
+    * [[inferenceConfs]]) → the schema Spark inferred for that path. */
+  private type MemoKey = (String, Seq[(String, Long, Long)], Seq[String])
+
+  private val inferred =
+    new java.util.concurrent.ConcurrentHashMap[MemoKey, StructType]()
+
+  /** `spark.read.parquet(path)`, with the footer-inference job paid once
+    * per file set: the key comes from one driver-side listing, and a
+    * hit reads with exactly the schema Spark inferred on the miss, so
+    * the DataFrame is the same. A path holding a subdirectory or no
+    * data file is never remembered. */
+  private def readRaw(spark: SparkSession, path: String): DataFrame = {
+    val key: Option[MemoKey] =
+      DataFiles.flat(spark.sparkContext.hadoopConfiguration, path)
+        .filter(_.nonEmpty).map { files =>
+          (path,
+            files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted,
+            inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+        }
+    key.flatMap(k => Option(inferred.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val raw = spark.read.parquet(path)
+        key.foreach(inferred.put(_, raw.schema))
+        raw
+    }
   }
 
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")

@@ -1,8 +1,15 @@
 package graft.models
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.pipeline.DataFiles
 
 /** A frozen add-one-smoothed bigram language model: the two count
   * tables plus the training vocabulary size. Counts are exact longs,
@@ -73,9 +80,36 @@ object ModelStore {
       s"$path/meta")
   }
 
+  /** Loads the LM with no Spark job: the count tables are lazy reads,
+    * and the one-row `meta` is read on the driver. */
   def loadBigramLm(spark: SparkSession, path: String): BigramLm = {
     def read(t: String) = loadTable(spark, s"$path/$t", LmSchemas(t))
-    BigramLm(read("cab"), read("ca"),
-      read("meta").collect().head.getAs[Long]("vocab_size"))
+    BigramLm(read("cab"), read("ca"), vocabSize(spark, s"$path/meta"))
+  }
+
+  /** The `vocab_size` of the LM's one-row `meta` table, read through
+    * parquet-hadoop. The reader is handed the session's loaded Hadoop
+    * configuration: without read options it builds a fresh one and
+    * re-parses every `*-site.xml` on each open. */
+  private def vocabSize(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val values = DataFiles.list(conf, dir).flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, conf), HadoopReadOptions.builder(conf).build())
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { rows =>
+            val records = new ColumnIOFactory().getColumnIO(schema)
+              .getRecordReader(rows, new GroupRecordConverter(schema))
+            Seq.fill(rows.getRowCount.toInt)(records.read().getLong("vocab_size", 0))
+          }.toList
+      } finally reader.close()
+    }
+    values match {
+      case Seq(v) => v
+      case _ => throw new IllegalStateException(
+        s"bigram LM meta at $dir holds ${values.size} vocab_size rows, expected 1")
+    }
   }
 }

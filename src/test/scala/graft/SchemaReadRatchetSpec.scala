@@ -15,7 +15,7 @@ class SchemaReadRatchetSpec extends AnyFunSuite {
 
   private val allowed: Map[String, String] = Map(
     "graft/Tables.scala" ->
-      "Tables.load infers the fixture schema to guard against drift",
+      "infers a fixture's schema once per file set, to guard against drift",
     "graft/queries/ScansSinks.scala" ->
       "the scan keys exist to show Spark's read path, inference included",
     "graft/pipeline/VersionedTable.scala" ->

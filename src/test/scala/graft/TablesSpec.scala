@@ -4,12 +4,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The fixture loader is the single seam between the driver-generated
-  * parquet and every oracle-checked query, and the sandbox has already
-  * re-provisioned fixtures mid-build once (round 9: events.ts changed
-  * Parquet physical type). These tests pin the two guarantees Tables
-  * makes: (1) schema drift fails AT LOAD with an error naming the
-  * table, column, and types; (2) timestamp columns land as
-  * timestamp_ntz whichever of the observed generations the file is in.
+  * parquet and every oracle-checked query, and regenerated fixtures
+  * have changed a Parquet physical type before (events.ts). These
+  * tests pin the three guarantees Tables makes: (1) schema drift fails
+  * AT LOAD with an error naming the table, column, and types, also
+  * when the files change between two loads in one session; (2)
+  * timestamp columns land as timestamp_ntz whichever of the observed
+  * generations the file is in; (3) a file set's schema is inferred
+  * once, so a repeated load runs no Spark job.
   */
 class TablesSpec extends SparkSuite {
 
@@ -29,9 +31,9 @@ class TablesSpec extends SparkSuite {
 
   test("a retyped column fails loudly, naming table, column, and both types") {
     val dir = "target/test-fixtures/tables/retyped"
-    // region with r_regionkey widened int32 -> int64: the kind of silent
-    // generator change that round 9 caught three layers up as an oracle
-    // hash mismatch, and that must now fail in Tables with a clear message
+    // region with r_regionkey widened int32 -> int64: a silent generator
+    // change that would otherwise surface three layers up as an oracle
+    // hash mismatch must fail in Tables with a clear message
     Tables.region(spark, Sf)
       .withColumn("r_regionkey", col("r_regionkey").cast(LongType))
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
@@ -42,6 +44,36 @@ class TablesSpec extends SparkSuite {
     assert(e.getMessage.contains("r_regionkey"))
     assert(e.getMessage.contains("int"))
     assert(e.getMessage.contains("bigint"))
+  }
+
+  test("a fixture retyped in place between two loads fails the second load") {
+    val dir = "target/test-fixtures/tables/retyped-in-place"
+    val path = s"$dir/region.parquet"
+    Tables.region(spark, Sf).write.mode("overwrite").parquet(path)
+    assert(Tables.load(spark, dir, "region").schema("r_regionkey").dataType == IntegerType)
+    Tables.region(spark, Sf)
+      .withColumn("r_regionkey", col("r_regionkey").cast(LongType))
+      .write.mode("overwrite").parquet(path)
+    val e = intercept[IllegalStateException] {
+      Tables.load(spark, dir, "region")
+    }
+    assert(e.getMessage.contains("region"))
+    assert(e.getMessage.contains("r_regionkey"))
+    assert(e.getMessage.contains("int"))
+    assert(e.getMessage.contains("bigint"))
+  }
+
+  test("an unchanged file set is inferred once: a repeated load runs no job") {
+    val dir = "target/test-fixtures/tables/memo"
+    Tables.orders(spark, Sf).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val (first, cold) = SparkWork.measure(spark)(Tables.load(spark, dir, "orders"))
+    assert(cold.jobs <= 1, cold.jobStageNames)
+    val (second, warm) = SparkWork.measure(spark)(Tables.load(spark, dir, "orders"))
+    assert(warm.jobs === 0, warm.jobStageNames)
+    assert(second.schema === first.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(second) === rows(first))
   }
 
   test("a missing / extra column fails loudly with both column lists") {
@@ -77,7 +109,8 @@ class TablesSpec extends SparkSuite {
     assert(got == want)
 
     // Non-UTC session: the cast would shift every value, so the loader
-    // must refuse rather than silently drift (ADVICE r9).
+    // must refuse rather than silently drift, also when this directory's
+    // schema is already remembered from the load above.
     withSQLConf("spark.sql.session.timeZone" -> "America/New_York") {
       val e = intercept[IllegalStateException] {
         Tables.load(spark, dir, "orders")
