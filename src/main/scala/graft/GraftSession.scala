@@ -16,8 +16,22 @@ import org.apache.spark.sql.SparkSession
   * creates files. Hadoop caches FileSystem instances JVM-wide by
   * scheme, authority and user, not by configuration, so a `file:`
   * FileSystem another configuration created earlier in the JVM wins
-  * over this setting. */
+  * over this setting.
+  *
+  * The generated-code cache holds [[CodegenCacheEntries]] classes,
+  * not Spark's default 100. Six registry keys (four relational ones,
+  * PCA and Jaccard) already generate 176 distinct classes, and the
+  * cache evicts the least recently used one, so with 100 entries a
+  * key that runs again finds its classes evicted or not depending on
+  * the order of the keys before it: a light key pays 8 to 20 compiles
+  * in one pass and none in the next. With the larger cache a repeated
+  * plan compiles nothing. An entry holds about 13 KB of driver heap,
+  * so a full cache holds about 13 MB. The cache is JVM-wide and sized
+  * when the JVM first generates code, so this holds when the session
+  * built here is the JVM's first. */
 object GraftSession {
+
+  val CodegenCacheEntries = 1000
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
@@ -28,6 +42,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Local session sized by the SPARK_GRAFT_CPUS contract. */
   def local(cpus: String): SparkSession = {

@@ -33,6 +33,10 @@ import org.apache.spark.sql.{Observation, SparkSession}
   * watermark.
   *
   * Committing one export job costs one Spark job: the sink's write.
+  * After the session's first job it compiles no code either: the
+  * sink hands `job_id` to the writer as a string, so the generated
+  * write code does not depend on the job id (see
+  * [[ParquetWarehouseSink]]).
   * Both checkpoint stores look up and append without a Spark job
   * (a [[ParquetCheckpointStore]] scans only to reload files another
   * writer added). The row count is observed on the raw scan, below

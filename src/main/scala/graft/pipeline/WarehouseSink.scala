@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.types.StringType
 
 /** Warehouse load boundary (reference A9: BigQuery_uploader.main,
   * /root/reference/bq_uploader.py:14-35 — dataset + table + file
@@ -28,12 +29,24 @@ trait WarehouseSink {
   * job_id partition makes that re-run idempotent instead of
   * duplicating rows. Without a job_id column the sink degrades to
   * plain append (at-least-once).
+  *
+  * The partitioned write casts `job_id` to a string first. The
+  * optimizer folds the cast into the `job_id` literal, and codegen
+  * inlines a long literal into the generated Java source (`<id>L`)
+  * but passes a string literal to it as a reference object. So with
+  * the cast the write's generated source is the same for every job
+  * id: it is compiled once per session and hits the codegen cache
+  * for every later job, instead of compiling fresh classes per job.
+  * The bytes on disk do not change: a partition value lives only in
+  * the `job_id=<id>` directory name, which the writer renders through
+  * a cast to string either way.
   */
 final class ParquetWarehouseSink(root: String) extends WarehouseSink {
   override def load(df: DataFrame, dataset: String, table: String): Unit = {
     val target = s"$root/$dataset/$table"
     if (df.columns.contains("job_id"))
-      df.write.mode(SaveMode.Overwrite)
+      df.withColumn("job_id", df.col("job_id").cast(StringType))
+        .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("job_id").parquet(target)
     else df.write.mode(SaveMode.Append).parquet(target)

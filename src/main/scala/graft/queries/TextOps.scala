@@ -187,9 +187,8 @@ object TextOps extends QueryPack {
 
   /** Keep-first near-dup removal over an explicit (d1, d2) pair
     * frame, survivors counted by lang — q_dedup_pipeline's consumer,
-    * parameterized by the pair plan so the sparse harness can assert
-    * GROUPED answer equality between the prefix default and the
-    * plain-join reference. */
+    * parameterized by the pair plan so GROUPED answers can be compared
+    * between the prefix default and the plain-join reference. */
   def dedupSurvivorsByLang(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val losers = pairs.select(col("d2").as("doc_id")).distinct()
     docs.join(losers, Seq("doc_id"), "left_anti")
@@ -290,9 +289,10 @@ object TextOps extends QueryPack {
   /** Plain-join containment reference — the plain token-join
     * implementation retained as the EXACT-MEMBER REFERENCE for the
     * prefix-filtered [[containmentOver]] (the same contract role
-    * [[jaccardOver]] plays for the unigram prefix plan): SparseBench
-    * asserts row-identical answers between the two on the
-    * realistic-density corpus every probe run, and the DuckDB oracle
+    * [[jaccardOver]] plays for the unigram prefix plan). The
+    * sparse-corpus A/B (`7592235:src/main/scala/graft/SparseBench.scala`)
+    * asserted row-identical answers between the two on a
+    * realistic-density corpus, and the DuckDB oracle
     * (the same plain join in SQL) hash-checks the production plan
     * every graded run. Never a production consumer — quadratic in a
     * viral shingle bucket by construction. */
@@ -318,7 +318,8 @@ object TextOps extends QueryPack {
   }
 
   /** Public prefix-plan containment pairs over 3-gram shingles —
-    * q_dedup_containment's plan, exposed for the sparse A/B harness. */
+    * q_dedup_containment's plan, exposed for A/Bs against
+    * [[containmentPairsPlain]]. */
   def containmentPairs(docs: DataFrame, tNum: Int, tDen: Int): DataFrame =
     containmentOver(distinctShingles(docs), tNum, tDen)
 

@@ -59,4 +59,21 @@ class EntrySpec extends SparkSuite {
     }
     assert(offenders.isEmpty, s"hash-unsafe output columns: $offenders")
   }
+
+  test("the graded session keeps more generated classes than Spark's default: a repeated set of 150 plans compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    // each multiplier is inlined into the generated source, so every
+    // plan compiles its own classes
+    def round(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 150).foreach(k => spark.range(4).selectExpr(s"id * ${k + 7000} AS v").collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = round()
+    assert(first > 100, s"the first round compiled $first classes, not more than Spark's default cache")
+    val second = round()
+    assert(second == 0, s"the repeated round compiled $second classes")
+  }
 }

@@ -278,6 +278,96 @@ class PipelineSpec extends SparkSuite {
     assert(helper.find(plan)(_.isInstanceOf[SortExec]).isEmpty, s"the write sorts its rows:\n$plan")
   }
 
+  test("a new export job compiles no code: the sink's write source is the same for every job id") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints17",
+      warehouseRoot = s"$root/warehouse17",
+      tenants = Seq(TenantConfig("app-v", "Dataset_V")),
+      reportTypes = Seq("custom"))
+    val job = IngestJob(spark, cfg, new ParquetCheckpointStore(spark, cfg.checkpointPath),
+      new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier)
+    // the warm-up job compiles whatever this write shape needs
+    writeJob("app-v", "custom", 1101, rows = 8, gzip = false)
+    assert(job.run("app-v", "custom") == 8)
+
+    // two ids no other write in this JVM uses
+    val fresh = Seq(6000000001L, 6000000002L)
+    fresh.foreach(writeJob("app-v", "custom", _, rows = 8, gzip = false))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val warehouse = new File(cfg.warehouseRoot).getAbsolutePath
+    def intoWarehouse(plan: SparkPlan) = plan.collectFirst {
+      case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) => i.outputPath.toUri.getPath
+    }.exists(_.startsWith(warehouse))
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (intoWarehouse(qe.executedPlan)) writes.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val compiledBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val n =
+      try job.run("app-v", "custom")
+      finally {
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiledBefore
+    assert(n == 16)
+    assert(writes.size == 2, s"captured ${writes.size} sink writes")
+    val Seq(first, second) = writes.toArray(Array.empty[SparkPlan]).toSeq.map { plan =>
+      helper.collect(plan) { case w: WholeStageCodegenExec => w.doCodeGen()._2.body }
+    }
+    assert(first.nonEmpty, "the sink's write has no whole-stage codegen")
+    assert(first == second, "the generated write source depends on the job id")
+    assert(compiled == 0, s"two new export jobs compiled $compiled classes")
+  }
+
+  test("job_id partitions keep long ids: directory names, read-back values, no job_id column in the files") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types.LongType
+    val cfg = config.copy(
+      checkpointPath = s"$root/checkpoints18",
+      warehouseRoot = s"$root/warehouse18",
+      tenants = Seq(TenantConfig("app-u", "Dataset_U")),
+      reportTypes = Seq("custom"))
+    val ids = Seq(1201L, Int.MaxValue.toLong + 1, 5000000001L)
+    ids.foreach(id => writeJob("app-u", "custom", id, rows = 3, gzip = id % 2 == 0))
+    assert(IngestJob(spark, cfg, new ParquetCheckpointStore(spark, cfg.checkpointPath),
+      new ParquetWarehouseSink(cfg.warehouseRoot), new LogNotifier).run("app-u", "custom") == 9)
+
+    val table = new File(s"${cfg.warehouseRoot}/Dataset_U/custom")
+    assert(table.listFiles().filter(_.isDirectory).map(_.getName).toSet ==
+      ids.map(id => s"job_id=$id").toSet)
+    val back = spark.read.parquet(table.getPath)
+    assert(back.schema("job_id").dataType == LongType)
+    assert(back.select("job_id").distinct().collect().map(_.getLong(0)).toSet == ids.toSet)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = dataFilesUnder(table)
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf),
+        HadoopReadOptions.builder(conf).build())
+      val columns =
+        try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
+        finally reader.close()
+      assert(columns.contains("userid") && !columns.contains("job_id"),
+        s"$f holds columns $columns")
+    }
+  }
+
   test("a lookup over an unchanged checkpoint listing launches no Spark job") {
     val path = s"$root/checkpoints6"
     val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
